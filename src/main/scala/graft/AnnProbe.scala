@@ -7,7 +7,6 @@ package graft
 // each path with the SAME unbounded query batch, the 1×/10× growth
 // evidence for REGRESSIONS.md. Args: SF dirs (default the three testdata
 // SFs); pass /tmp/sfx10_all for the 10× probe.
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
 
@@ -27,11 +26,7 @@ object AnnProbe {
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
         "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     for (dir <- dirs) {
       val emb = Tables.load(spark, dir, "embeddings")

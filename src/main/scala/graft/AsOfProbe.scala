@@ -9,7 +9,6 @@ package graft
 // width so the REGRESSIONS row can tie the measured crossover to the
 // router's threshold. Args: [sfDir] [widths...] (defaults sf0.1 and
 // widths 1, 4, 16, 48 extra long columns = 8..384 payload bytes).
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.AsOfJoin
@@ -26,11 +25,7 @@ object AsOfProbe {
     val widths = if (args.length > 1) args.tail.map(_.toInt).toSeq
       else Seq(1, 4, 16, 48)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val ev = Tables.load(spark, dir, "events")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time one declared query (optionally print its formatted plan,
   * or a per-SQL-execution profile — composite queries like the curation
   * pipeline fire many executions: persists, localCheckpoints, convergence
@@ -23,17 +21,8 @@ object BenchOne {
     // when the interactive console can't host a code path). Off for the
     // driver's bench; purely observational.
     val eventLogDir = sys.env.get("SPARK_GRAFT_EVENTLOG")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    eventLogDir.foreach { d =>
-      builder.config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", d)
-    }
-    val spark = builder.getOrCreate()
+    val spark = Session.local(cpus, eventLogDir.toSeq.flatMap(d =>
+      Seq("spark.eventLog.enabled" -> "true", "spark.eventLog.dir" -> d)): _*)
     spark.sparkContext.setLogLevel("WARN")
     val allNames = name.split(',').toSeq
     // explain/profile cover EVERY name in a comma list (ADVICE r12: only

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps the formatted physical plan of every declared query to PLANS.md —
   * the reviewable artifact for pushdown/pruning/join-strategy auditing.
   * Usage: runMain graft.PlanDump [sfDir] [outFile]
@@ -12,13 +10,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outFile = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local("4")
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder

@@ -2,16 +2,11 @@ package graft
 
 // Dev tool: ANN/IVF recall harness — prints recall@10 vs brute force per
 // (iters, cells, probe) at each SF, for tuning the similarity_ivf contract.
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
 object RecallCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.local("8")
     spark.sparkContext.setLogLevel("ERROR")
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val emb = Tables.load(spark, dir, "embeddings")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe (r18): run the declared slate in bench order and record the
   * BlockManager storage high-water after every query — the direct
   * measurement for the checkpoint-block ratchet VERDICT r17 item 2 calls
@@ -16,13 +14,7 @@ object StorageProbe {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val stride = if (args.length > 1) args(1).toInt else 10
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     var i = 0
     var peakMem = 0L

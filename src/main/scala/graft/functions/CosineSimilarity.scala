@@ -10,10 +10,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * `array<float>` columns (SURVEY.md §7.4: "optional codegen Expression if
   * bench requires"). Participates in whole-stage codegen via [[doGenCode]]
   * — a tight primitive double loop with no per-element boxing, per-row
-  * array allocation, or lambda dispatch, unlike the higher-order-function
-  * composition in [[VectorOps.cosine]].
+  * array allocation, or lambda dispatch, unlike a higher-order-function
+  * composition (`zip_with` + `aggregate`; the specs keep one as the
+  * parity oracle `HofTwins.cosine`).
   *
-  * Numerical contract (MUST match VectorOps.cosine and the DuckDB oracle
+  * Numerical contract (MUST match the HofTwins.cosine parity oracle and the DuckDB oracle
   * bitwise): each float is widened to double before multiplying, the three
   * accumulators fold sequentially left-to-right, and the result is
   * `dot / (sqrt(na) * sqrt(nb))`. IEEE doubles make that reproducible
@@ -43,7 +44,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    // Parity with the HOF formulation (VectorOps.cosine): length mismatch
+    // Parity with the HOF formulation (HofTwins.cosine): length mismatch
     // or any null element poisons the result to null — zip_with pads the
     // shorter side with null and null folds to null there.
     if (x.numElements() != y.numElements()) return null
@@ -65,7 +66,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
     // number — a zero (missing/failed) embedding would rank #1 in every
     // top-k and read as a near-dup of everything in its block. Cosine to
     // the zero vector is defined here as 0 (no similarity). Mirrored in
-    // doGenCode, VectorOps.cosine and every oracle twin.
+    // doGenCode and every oracle twin.
     if (na == 0.0 || nb == 0.0) return 0.0
     dot / (math.sqrt(na) * math.sqrt(nb))
   }

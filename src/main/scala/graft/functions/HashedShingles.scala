@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * four nested interpreted higher-order functions (split, transform,
   * sequence, slice+hash), each of which boxes per element.
   *
-  * Hash identity differs from the HOF composition's xxhash64 chain — any
+  * Hash identity differs from the HOF xxhash64 chain (`HofTwins.shingleHashes`) — any
   * fixed 64-bit hash family defines the same SET semantics, and every
   * consumer (min-hash signatures, banding, jaccard counts) only needs
   * hashes to be stable and well-mixed, so results depend only on the token

@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `sig` the k-component MinHash signature.
   *
   * Produces values BITWISE-IDENTICAL to the interpreted HOF composition
-  * [[graft.ops.LlmOps.minhashPlan]] — same portable md5-48 family an
+  * the specs keep as `HofTwins.minhashPlan` — same portable md5-48 family an
   * external SQL oracle replays — but in one JIT-compiled loop with one
   * MessageDigest per shingle window instead of four nested interpreted
   * higher-order functions boxing per element:

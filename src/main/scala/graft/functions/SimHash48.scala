@@ -9,7 +9,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native one-pass SimHash projection: `simhash48(text, bits)` → long.
   *
   * Produces values BITWISE-IDENTICAL to the interpreted HOF composition
-  * [[graft.ops.LlmOps.simhash]] — the portable md5-48 hash family an
+  * the specs keep as `HofTwins.simhash` — the portable md5-48 hash family an
   * external SQL oracle replays digit for digit — but in one JIT-compiled
   * loop with one MessageDigest per token instead of an
   * O(|tokens| × bits) chain of interpreted `aggregate`/`zip_with` lambdas

@@ -7,10 +7,11 @@ import org.apache.spark.sql.types.DecimalType
 
 /** Vector math over `array<float>` embedding columns (SURVEY.md §2.12 L3).
   *
-  * Spark has no built-in cosine similarity; rather than a Scala UDF (an
-  * opaque black box to Catalyst, breaks whole-stage codegen), these compose
-  * built-in higher-order functions (`zip_with` + `aggregate`), which codegen
-  * and need no serialization boundary.
+  * The per-row kernels (cosine, prefix cosines, nearest centroid, JL
+  * projection, Gram aggregate) are the engine's native Catalyst
+  * expressions, registered by [[graft.GraftExtensions]] and called by
+  * name: codegen'd primitive loops, no UDF serialization boundary. Every
+  * session comes from [[graft.Session]], which guarantees they resolve.
   *
   * Determinism: elements are cast to double BEFORE multiplying and the fold
   * is sequential left-to-right, so results are bitwise-reproducible across
@@ -19,55 +20,23 @@ import org.apache.spark.sql.types.DecimalType
   */
 object VectorOps {
 
-  /** Sequential-fold dot product in double precision. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a.cast("array<double>"), b.cast("array<double>"), (x, y) => x * y),
-      lit(0.0),
-      (acc, x) => acc + x)
-
-  /** L2 norm. */
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Cosine similarity = dot / (|a| * |b|), defined as 0 for a zero-norm
-    * side. Without the guard 0/0 yields NaN, and Spark sorts NaN ABOVE
-    * every number — a zero (missing/failed) embedding would rank #1 in
-    * every top-k and read as a near-dup of everything in its block,
-    * silently dropping its whole cluster in a dedup run. Mirrored in the
-    * native [[CosineSimilarity]] expression and every oracle twin.
+  /** Cosine similarity = dot / (|a| * |b|) via the native codegen'd
+    * [[CosineSimilarity]] expression, defined as 0 for a zero-norm side.
+    * Without the guard 0/0 yields NaN, and Spark sorts NaN ABOVE every
+    * number — a zero (missing/failed) embedding would rank #1 in every
+    * top-k and read as a near-dup of everything in its block, silently
+    * dropping its whole cluster in a dedup run. Every oracle twin mirrors
+    * the guard.
     */
-  def cosine(a: Column, b: Column): Column = {
-    val na = dot(a, a)
-    val nb = dot(b, b)
-    when(na === 0.0 || nb === 0.0, lit(0.0))
-      .otherwise(dot(a, b) / (sqrt(na) * sqrt(nb)))
-  }
-
-  /** Cosine via the native codegen'd [[CosineSimilarity]] expression when
-    * GraftExtensions is installed, falling back to the HOF composition.
-    * Both produce bitwise-identical doubles (same widening, same fold
-    * order), so plans may switch freely without affecting results.
-    */
-  def cosineBest(spark: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column =
-    if (spark.catalog.functionExists("cosine_sim")) call_function("cosine_sim", a, b)
-    else cosine(a, b)
+  def cosine(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
 
   /** Every prefix-truncated cosine of (a, b) at the given cut dims as one
-    * array<double>, via the native one-fold [[CosinePrefixes]] when
-    * GraftExtensions is installed, else the per-dim slice+cosine
-    * composition. Both produce bitwise-identical doubles (same
-    * left-to-right fold, same widening); the fallback wraps each slice
-    * cosine in the same "null row survives as a null element" contract
-    * (slice of a null array is null, and cosine of null is null — an
-    * array literal of per-dim cosines keeps all C elements either way).
+    * array<double>, from the native one-fold [[CosinePrefixes]]: element i
+    * is bitwise `cosine(slice(a, 1, dims(i)), slice(b, 1, dims(i)))`, and a
+    * null row yields null elements, not a null array.
     */
-  def cosinePrefixesBest(spark: org.apache.spark.sql.SparkSession,
-                         a: Column, b: Column, dims: Seq[Int]): Column =
-    if (spark.catalog.functionExists("cosine_prefixes"))
-      call_function("cosine_prefixes", a, b, array(dims.map(lit(_)): _*))
-    else
-      array(dims.map(d =>
-        cosine(slice(a, lit(1), lit(d)), slice(b, lit(1), lit(d)))): _*)
+  def cosinePrefixes(a: Column, b: Column, dims: Seq[Int]): Column =
+    call_function("cosine_prefixes", a, b, array(dims.map(lit(_)): _*))
 
   /** Int8 scalar quantization calibration + encode check — the compression
     * step a 100 TB embedding store applies before indexing (4x smaller
@@ -159,7 +128,7 @@ object VectorOps {
     embeddings
       .crossJoin(broadcast(queryVec))
       .select(col(idCol),
-        cosineBest(embeddings.sparkSession, col(embCol), col("__qv")).as("score"))
+        cosine(col(embCol), col("__qv")).as("score"))
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
   }
@@ -179,7 +148,6 @@ object VectorOps {
     */
   def knnClassify(corpus: DataFrame, queries: DataFrame, idCol: String,
                   embCol: String, labelCol: String, k: Int = 5): DataFrame = {
-    val spark = corpus.sparkSession
     val q = queries.select(col(idCol).as("query_id"), col(embCol).as("__qv"))
     val byScore = Window.partitionBy(col("query_id"))
       .orderBy(col("__score").desc, col("__nid").asc)
@@ -187,7 +155,7 @@ object VectorOps {
       .orderBy(col("__votes").desc, col(labelCol).asc)
     corpus.crossJoin(broadcast(q))
       .select(col("query_id"), col(labelCol), col(idCol).as("__nid"),
-        cosineBest(spark, col(embCol), col("__qv")).as("__score"))
+        cosine(col(embCol), col("__qv")).as("__score"))
       .withColumn("__rn", row_number().over(byScore))
       .filter(col("__rn") <= k)
       .groupBy(col("query_id"), col(labelCol))
@@ -214,7 +182,6 @@ object VectorOps {
     */
   def hardNegatives(corpus: DataFrame, queries: DataFrame, idCol: String,
                     embCol: String, labelCol: String, k: Int = 3): DataFrame = {
-    val spark = corpus.sparkSession
     val q = queries.select(col(idCol).as("query_id"),
       col(labelCol).as("__qlab"), col(embCol).as("__qv"))
     val byScore = Window.partitionBy(col("query_id"))
@@ -223,7 +190,7 @@ object VectorOps {
       .filter(col(labelCol) =!= col("__qlab"))
       .select(col("query_id"), col(idCol).as("neg_id"),
         col(labelCol).as("neg_label"),
-        cosineBest(spark, col(embCol), col("__qv")).as("score"))
+        cosine(col(embCol), col("__qv")).as("score"))
       .withColumn("rank", row_number().over(byScore))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neg_id"),
@@ -258,7 +225,6 @@ object VectorOps {
                        nCells: Int = 8, nProbe: Int = 2, seed: Long = 42L,
                        sampleCap: Int = 4096,
                        prebuilt: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    val spark = corpus.sparkSession
     val (assigned, centroids) =
       prebuilt.getOrElse(ivfIndex(corpus, embCol, nCells, seed, sampleCap))
     val q = queries.select(col(idCol).as("query_id"),
@@ -267,7 +233,7 @@ object VectorOps {
       .orderBy(col("__cs").desc, col("__cell").asc)
     val probes = q.crossJoin(broadcast(centroids))
       .select(col("query_id"), col("__qlab"), col("__qv"), col("__cell"),
-        cosineBest(spark, col("__centroid"), col("__qv")).as("__cs"))
+        cosine(col("__centroid"), col("__qv")).as("__cs"))
       .withColumn("__pr", row_number().over(byCent))
       .filter(col("__pr") <= nProbe)
       .select(col("query_id"), col("__qlab"), col("__qv"), col("__cell"))
@@ -277,7 +243,7 @@ object VectorOps {
       .filter(col(labelCol) =!= col("__qlab"))
       .select(col("query_id"), col(idCol).as("neg_id"),
         col(labelCol).as("neg_label"),
-        cosineBest(spark, col(embCol), col("__qv")).as("score"))
+        cosine(col(embCol), col("__qv")).as("score"))
       .withColumn("rank", row_number().over(byScore))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neg_id"),
@@ -299,7 +265,6 @@ object VectorOps {
                      nCells: Int = 8, nProbe: Int = 2, seed: Long = 42L,
                      sampleCap: Int = 4096,
                      prebuilt: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    val spark = corpus.sparkSession
     val (assigned, centroids) =
       prebuilt.getOrElse(ivfIndex(corpus, embCol, nCells, seed, sampleCap))
     val q = queries.select(col(idCol).as("query_id"), col(embCol).as("__qv"))
@@ -307,7 +272,7 @@ object VectorOps {
       .orderBy(col("__cs").desc, col("__cell").asc)
     val probes = q.crossJoin(broadcast(centroids))
       .select(col("query_id"), col("__qv"), col("__cell"),
-        cosineBest(spark, col("__centroid"), col("__qv")).as("__cs"))
+        cosine(col("__centroid"), col("__qv")).as("__cs"))
       .withColumn("__pr", row_number().over(byCent))
       .filter(col("__pr") <= nProbe)
       .select(col("query_id"), col("__qv"), col("__cell"))
@@ -317,7 +282,7 @@ object VectorOps {
       .orderBy(col("__votes").desc, col(labelCol).asc)
     assigned.join(probes, Seq("__cell"))
       .select(col("query_id"), col(labelCol), col(idCol).as("__nid"),
-        cosineBest(spark, col(embCol), col("__qv")).as("__score"))
+        cosine(col(embCol), col("__qv")).as("__score"))
       .withColumn("__rn", row_number().over(byScore))
       .filter(col("__rn") <= k)
       .groupBy(col("query_id"), col(labelCol))
@@ -358,7 +323,7 @@ object VectorOps {
     val b = df.select(col(blockCol).as("__blk_b"), col(idCol).as("id_b"), col(embCol).as("__eb"))
     a.join(b, col("__blk") === col("__blk_b") && col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        cosineBest(df.sparkSession, col("__ea"), col("__eb")).as("score"))
+        cosine(col("__ea"), col("__eb")).as("score"))
       .filter(col("score") >= threshold)
   }
 
@@ -470,26 +435,12 @@ object VectorOps {
     df.orderBy(xxhash64(col(keyCol)).asc).limit(cap.toInt)
   }
 
-  /** Index of the nearest centroid (squared euclidean) — a constant-size
-    * fold over the centroid list; `cents` ships as one literal.
+  /** Index of the nearest centroid (squared euclidean) via the native
+    * [[NearestCell]] expression: primitive loops, the centroid list ships
+    * as one literal decoded once per task, first-occurrence argmin on ties.
     */
-  /** Nearest-centroid index: the native [[NearestCell]] expression when
-    * GraftExtensions is installed (primitive loops, centroid literal
-    * decoded once per task), HOF composition otherwise. Both use
-    * first-occurrence argmin on ties.
-    */
-  private[graft] def nearestCell(spark: org.apache.spark.sql.SparkSession,
-                          v: Column, cents: Seq[Seq[Double]]): Column = {
-    val c = typedlit(cents)
-    if (spark.catalog.functionExists("nearest_cell")) call_function("nearest_cell", v, c)
-    else {
-      val dists = transform(sequence(lit(0), lit(cents.size - 1)), j =>
-        aggregate(
-          zip_with(v, element_at(c, j + 1), (x, y) => (x - y) * (x - y)),
-          lit(0.0), (s, e) => s + e))
-      (array_position(dists, array_min(dists)) - 1).cast("int")
-    }
-  }
+  private[graft] def nearestCell(v: Column, cents: Seq[Seq[Double]]): Column =
+    call_function("nearest_cell", v, typedlit(cents))
 
   /** Seeded k-means++ + Lloyd refinement, in memory over a bounded sample.
     * Fully deterministic: seeded RNG, sequential arithmetic.
@@ -565,7 +516,7 @@ object VectorOps {
                iters: Int = 10): (DataFrame, DataFrame) = {
     val cents = ivfFit(embeddings, embCol, nCells, seed, sampleCap, iters)
     val assigned = embeddings.withColumn("__cell",
-      nearestCell(embeddings.sparkSession, col(embCol).cast("array<double>"), cents))
+      nearestCell(col(embCol).cast("array<double>"), cents))
     (assigned, centroidTable(embeddings.sparkSession, cents))
   }
 
@@ -633,7 +584,7 @@ object VectorOps {
       // sort. This shuffle IS the index build's clustering pass — paid
       // once per corpus snapshot, exactly like a FAISS list build.
       embeddings.withColumn("__cell",
-          nearestCell(spark, col(embCol).cast("array<double>"), cents))
+          nearestCell(col(embCol).cast("array<double>"), cents))
         .repartition(col("__cell"))
         .sortWithinPartitions(col("__cell")))
     (assigned, centroids)
@@ -760,7 +711,7 @@ object VectorOps {
       // a builder-side repartition would be re-shuffled on a
       // compaction-promoted append)
       def assign(df: DataFrame) = df.withColumn("__cell",
-        nearestCell(spark, col(embCol).cast("array<double>"), cents))
+        nearestCell(col(embCol).cast("array<double>"), cents))
       prev match {
         case None => Evolved.Rewrite(assign(embeddings))
         case Some(old) =>
@@ -816,24 +767,13 @@ object VectorOps {
     (assigned, centroids)
   }
 
-  /** Nearest-centroid index over QUANTIZED (long) vectors — same dispatch
-    * as the double-centroid variant: native `nearest_cell` when
-    * registered, HOF argmin fold otherwise, both first-occurrence on ties.
-    * All arithmetic stays exact: long diffs squared and summed fit a
-    * double losslessly at any realistic scale·dim.
+  /** Nearest-centroid index over QUANTIZED (long) vectors — the same
+    * native `nearest_cell`, first-occurrence on ties. All arithmetic stays
+    * exact: long diffs squared and summed fit a double losslessly at any
+    * realistic scale·dim.
     */
-  private def nearestCellLong(spark: org.apache.spark.sql.SparkSession,
-                              v: Column, cents: Seq[Seq[Long]]): Column = {
-    val c = typedlit(cents)
-    if (spark.catalog.functionExists("nearest_cell")) call_function("nearest_cell", v, c)
-    else {
-      val dists = transform(sequence(lit(0), lit(cents.size - 1)), j =>
-        aggregate(
-          zip_with(v, element_at(c, j + 1), (x, y) => (x - y) * (x - y)),
-          lit(0L), (s, e) => s + e))
-      (array_position(dists, array_min(dists)) - 1).cast("int")
-    }
-  }
+  private def nearestCellLong(v: Column, cents: Seq[Seq[Long]]): Column =
+    call_function("nearest_cell", v, typedlit(cents))
 
   /** Distributed Lloyd k-means in integer space — the FULL-DATA training
     * loop ([[ivfIndex]] is the other recipe: fit on a bounded sample,
@@ -866,7 +806,6 @@ object VectorOps {
                    k: Int, iters: Int, scale: Int = 1024): DataFrame = {
     require(k > 0, s"kmeansAssign: k must be positive, got $k")
     require(iters >= 0, s"kmeansAssign: iters must be >= 0, got $iters")
-    val spark = df.sparkSession
     val q = transform(col(vecCol), x => floor(x.cast("double") * scale).cast("long"))
     // persisted: read by every assign/update round and the final
     // projection; unpersisting before the caller's action would silently
@@ -879,7 +818,7 @@ object VectorOps {
     for (_ <- 1 to iters) {
       val centSeq = cents.map(_.toIndexedSeq).toIndexedSeq
       val updates = qdf
-        .select(nearestCellLong(spark, col("__q"), centSeq).as("__c"),
+        .select(nearestCellLong(col("__q"), centSeq).as("__c"),
           posexplode(col("__q")).as(Seq("__d", "__v")))
         .groupBy("__c", "__d")
         .agg(floor(sum(col("__v")).cast("double") / count(lit(1)))
@@ -891,7 +830,7 @@ object VectorOps {
     }
     val centSeq = cents.map(_.toIndexedSeq).toIndexedSeq
     val cLit = typedlit(centSeq)
-    val cluster = nearestCellLong(spark, col("__q"), centSeq)
+    val cluster = nearestCellLong(col("__q"), centSeq)
     qdf.select(col("__id"), cluster.as("__cl"), col("__q"))
       .select(col("__id").as(idCol), col("__cl").cast("long").as("cluster"),
         aggregate(
@@ -925,7 +864,6 @@ object VectorOps {
     */
   private def pqTrain(qdf: DataFrame, m: Int, k: Int, iters: Int,
                       sub: Int): Array[Array[Array[Long]]] = {
-    val spark = qdf.sparkSession
     def sliceS(s: Int) = slice(col("__q"), s * sub + 1, sub)
     val seedRows = qdf.orderBy(col("__id")).limit(k)
       .collect().map(_.getSeq[Long](1).toArray)
@@ -937,7 +875,7 @@ object VectorOps {
       // one aggregate, one m·k·sub-row collect
       val perSub = array((0 until m).map { s =>
         struct(lit(s).as("s"),
-          nearestCellLong(spark, sliceS(s),
+          nearestCellLong(sliceS(s),
             cents(s).map(_.toIndexedSeq).toIndexedSeq).as("c"),
           sliceS(s).as("qs"))
       }: _*)
@@ -989,7 +927,6 @@ object VectorOps {
               m: Int, k: Int, iters: Int, scale: Int = 1024,
               codebook: Option[Array[Array[Array[Long]]]] = None): DataFrame = {
     require(m > 0 && k > 0 && iters >= 0, s"pqCodes: bad params m=$m k=$k iters=$iters")
-    val spark = df.sparkSession
     val qdf = quantized(df, idCol, vecCol, scale).persist()
     val dim = qdf.select(size(col("__q"))).head().getInt(0)
     require(dim % m == 0, s"pqCodes: dim $dim not divisible by m=$m")
@@ -997,7 +934,7 @@ object VectorOps {
     def sliceS(s: Int) = slice(col("__q"), s * sub + 1, sub)
     val cents = codebook.getOrElse(pqTrain(qdf, m, k, iters, sub))
     val codeCols = (0 until m).map { s =>
-      nearestCellLong(spark, sliceS(s),
+      nearestCellLong(sliceS(s),
         cents(s).map(_.toIndexedSeq).toIndexedSeq).cast("long").as(s"code_$s")
     }
     val distCols = (0 until m).map { s =>
@@ -1033,7 +970,6 @@ object VectorOps {
                m: Int, k: Int, iters: Int, topK: Int,
                scale: Int = 1024,
                codebook: Option[Array[Array[Array[Long]]]] = None): DataFrame = {
-    val spark = corpus.sparkSession
     val qdf = quantized(corpus, idCol, vecCol, scale).persist()
     val dim = qdf.select(size(col("__q"))).head().getInt(0)
     require(dim % m == 0, s"pqSearch: dim $dim not divisible by m=$m")
@@ -1043,7 +979,7 @@ object VectorOps {
     // corpus → melted (id, s, code) rows: m longs per doc
     val codeStructs = array((0 until m).map { s =>
       struct(lit(s).as("s"),
-        nearestCellLong(spark, sliceS(s),
+        nearestCellLong(sliceS(s),
           cents(s).map(_.toIndexedSeq).toIndexedSeq).cast("long").as("code"))
     }: _*)
     val codes = qdf.select(col("__id"), explode(codeStructs).as("__e"))
@@ -1108,10 +1044,9 @@ object VectorOps {
     */
   def ivfTopK(assigned: DataFrame, centroids: DataFrame, embCol: String, idCol: String,
               queryVec: DataFrame, k: Int, nProbe: Int): DataFrame = {
-    val spark = assigned.sparkSession
     val probeCells = centroids
       .crossJoin(broadcast(queryVec))
-      .select(col("__cell"), cosineBest(spark, col("__centroid"), col("__qv")).as("__cs"))
+      .select(col("__cell"), cosine(col("__centroid"), col("__qv")).as("__cs"))
       .orderBy(col("__cs").desc, col("__cell").asc)
       .limit(nProbe)
       .select("__cell")
@@ -1119,7 +1054,7 @@ object VectorOps {
     assigned
       .filter(col("__cell").isin(probeCells: _*))
       .crossJoin(broadcast(queryVec))
-      .select(col(idCol), cosineBest(spark, col(embCol), col("__qv")).as("score"))
+      .select(col(idCol), cosine(col(embCol), col("__qv")).as("score"))
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
   }
@@ -1138,7 +1073,6 @@ object VectorOps {
   def annTopK(embeddings: DataFrame, embCol: String, idCol: String,
               queryVec: DataFrame, k: Int, nPlanes: Int, dim: Int,
               multiProbe: Boolean = true): DataFrame = {
-    val spark = embeddings.sparkSession
     val planes = hyperplanesPortable(nPlanes, dim)
     val bucketed = embeddings.withColumn("__bucket", lshBucket(col(embCol), planes))
     val q = queryVec.withColumn("__qbucket", lshBucket(col("__qv"), planes))
@@ -1152,7 +1086,7 @@ object VectorOps {
           .as("__qbucket"))
     bucketed
       .join(broadcast(probes), col("__bucket") === col("__qbucket"))
-      .select(col(idCol), cosineBest(spark, col(embCol), col("__qv")).as("score"))
+      .select(col(idCol), cosine(col(embCol), col("__qv")).as("score"))
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
   }
@@ -1182,8 +1116,7 @@ object VectorOps {
       .select(col(idCol).as("__cid"), col(embCol).as("__cv"))
       .crossJoin(broadcast(q))
       .select(col("query_id"), col("__cid"),
-        cosineBest(candidates.sparkSession,
-          col("__cv"), col("__qv")).as("__score"))
+        cosine(col("__cv"), col("__qv")).as("__score"))
     marginRollup(scored, k)
   }
 
@@ -1230,7 +1163,6 @@ object VectorOps {
                          sampleCap: Int = 4096,
                          prebuilt: Option[(DataFrame, DataFrame)] = None): DataFrame = {
     require(k >= 1 && nCells >= 1 && nProbe >= 1)
-    val spark = candidates.sparkSession
     val (assigned, centroids) =
       prebuilt.getOrElse(ivfIndex(candidates, embCol, nCells, seed, sampleCap))
     val q = queries.select(col(idCol).as("query_id"), col(embCol).as("__qv"))
@@ -1238,13 +1170,13 @@ object VectorOps {
       .orderBy(col("__cs").desc, col("__cell").asc)
     val probes = q.crossJoin(broadcast(centroids))
       .select(col("query_id"), col("__qv"), col("__cell"),
-        cosineBest(spark, col("__centroid"), col("__qv")).as("__cs"))
+        cosine(col("__centroid"), col("__qv")).as("__cs"))
       .withColumn("__pr", row_number().over(byCent))
       .filter(col("__pr") <= nProbe)
       .select(col("query_id"), col("__qv"), col("__cell"))
     val scored = assigned.join(probes, Seq("__cell"))
       .select(col("query_id"), col(idCol).as("__cid"),
-        cosineBest(spark, col(embCol), col("__qv")).as("__score"))
+        cosine(col(embCol), col("__qv")).as("__score"))
     marginRollup(scored, k)
   }
 
@@ -1253,9 +1185,8 @@ object VectorOps {
     * embeddings (a 4× index-size/bandwidth lever at 100 TB), measure how
     * much of the FULL-dimension top-k each prefix dimension preserves.
     * For every query and every `d ∈ prefixDims`, rank candidates by
-    * cosine over the first d components (plain HOF cosine on
-    * `slice(vec, 1, d)` — one scan scores all dims via a broadcast dims
-    * unnest), keep top-k per (d, query) as a group-limited window, and
+    * cosine over the first d components (the native [[cosinePrefixes]]
+    * scores every d in one fold per row), keep top-k per (d, query) as a group-limited window, and
     * report per d the k-overlap with the full-dimension ranking:
     * n_queries, mean and min overlap. Overlaps are exact int/k ratios;
     * the mean divides two exact longs — bitwise-replayable.
@@ -1270,13 +1201,12 @@ object VectorOps {
                         prefixDims: Seq[Int], fullDim: Int,
                         k: Int): DataFrame = {
     require(prefixDims.nonEmpty && k > 0)
-    val spark = corpus.sparkSession
     val dims = (prefixDims :+ fullDim).distinct.sorted
     val q = queries.select(col(idCol).as("query_id"), col(embCol).as("__qv"))
     // ONE fold per (candidate, query) pair scores every prefix dim (r17):
     // the per-dim explode used to triple the pair relation BEFORE scoring,
     // slicing both 64-float arrays per dim and re-folding the shared
-    // prefix; cosinePrefixesBest emits all cut cosines from one pass and
+    // prefix; cosinePrefixes emits all cut cosines from one pass and
     // only the C-double score array is exploded. posexplode's ordinal maps
     // back to the dim value through the same sorted literal array.
     val dimLit = array(dims.map(lit(_)): _*)
@@ -1284,7 +1214,7 @@ object VectorOps {
       .select(col(idCol).as("__cid"), col(embCol).as("__cv"))
       .crossJoin(broadcast(q))
       .select(col("query_id"), col("__cid"),
-        posexplode(cosinePrefixesBest(spark, col("__cv"), col("__qv"), dims))
+        posexplode(cosinePrefixes(col("__cv"), col("__qv"), dims))
           .as(Seq("__p", "__score")))
       .select(col("query_id"), element_at(dimLit, col("__p") + 1).as("__d"),
         col("__cid"), col("__score"))
@@ -1387,7 +1317,6 @@ object VectorOps {
                                    sampleCap: Int = 4096,
                                    prebuilt: Option[(DataFrame, DataFrame)] = None): DataFrame = {
     require(prefixDims.nonEmpty && k > 0 && nCells >= 1 && nProbe >= 1)
-    val spark = corpus.sparkSession
     val dims = (prefixDims :+ fullDim).distinct.sorted
     val (assigned, centroids) =
       prebuilt.getOrElse(ivfIndex(corpus, embCol, nCells, seed, sampleCap))
@@ -1396,7 +1325,7 @@ object VectorOps {
       .orderBy(col("__cs").desc, col("__cell").asc)
     val probes = q.crossJoin(broadcast(centroids))
       .select(col("query_id"), col("__qv"), col("__cell"),
-        cosineBest(spark, col("__centroid"), col("__qv")).as("__cs"))
+        cosine(col("__centroid"), col("__qv")).as("__cs"))
       .withColumn("__pr", row_number().over(byCent))
       .filter(col("__pr") <= nProbe)
       .select(col("query_id"), col("__qv"), col("__cell"))
@@ -1406,7 +1335,7 @@ object VectorOps {
     val dimLit = array(dims.map(lit(_)): _*)
     val scored = assigned.join(probes, Seq("__cell"))
       .select(col("query_id"), col(idCol).as("__cid"),
-        posexplode(cosinePrefixesBest(spark, col(embCol), col("__qv"), dims))
+        posexplode(cosinePrefixes(col(embCol), col("__qv"), dims))
           .as(Seq("__p", "__score")))
       .select(col("query_id"), element_at(dimLit, col("__p") + 1).as("__d"),
         col("__cid"), col("__score"))
@@ -1507,42 +1436,23 @@ object VectorOps {
     * shuffle until the caller aggregates. The d·k sign matrix is driver-
     * built from the same hash an external engine replays in SQL.
     *
-    * Runs on the native [[graft.functions.JlSignProject]] expression when
-    * the session registered it (two tight primitive loops inside
-    * whole-stage codegen, the sign matrix one reference object) — the
-    * interpreted nested-HOF fold cost ~7 ms/row, and even a flat unrolled
-    * ±element_at chain bloated the task binary to ~2.7 MiB of expression
-    * tree. Fallback (extension-less sessions) keeps the flat chain.
+    * Runs on the native [[graft.functions.JlSignProject]] expression (two
+    * tight primitive loops inside whole-stage codegen, the sign matrix one
+    * reference object) — the interpreted nested-HOF fold cost ~7 ms/row,
+    * and even a flat unrolled ±element_at chain bloated the task binary to
+    * ~2.7 MiB of expression tree.
     */
   def jlProject(emb: DataFrame, idCol: String, embCol: String,
-                k: Int, dim: Int): DataFrame = {
-    if (emb.sparkSession.catalog.functionExists("jl_sign_project"))
-      emb.select(col(idCol),
-        call_function("jl_sign_project", col(embCol), lit(k), lit(dim)).as("proj"))
-    else {
-      val signs: IndexedSeq[Long] = IndexedSeq.tabulate(k * dim) { idx =>
-        val (j, i) = (idx / dim, idx % dim)
-        if (md5Long48(s"jl_${j}_$i") % 2 == 1) 1L else -1L
-      }
-      val quant = transform(col(embCol),
-        v => floor(v.cast("double") * lit(1000.0)).cast("long"))
-      val dimCols: Seq[Column] = (0 until k).map { j =>
-        (0 until dim).map { i =>
-          val term = element_at(col("__q"), i + 1)
-          if (signs(j * dim + i) == 1L) term else -term
-        }.reduce(_ + _)
-      }
-      emb.select(col(idCol), quant.as("__q"))
-        .select(col(idCol), array(dimCols: _*).as("proj"))
-    }
-  }
+                k: Int, dim: Int): DataFrame =
+    emb.select(col(idCol),
+      call_function("jl_sign_project", col(embCol), lit(k), lit(dim)).as("proj"))
 
   /** Exact Gram matrix of the quantized embedding corpus — the Σ qqᵀ
     * second-moment structure PCA / whitening / decorrelation starts from,
     * as a d(d+1)/2-row upper-triangle relation. Embeddings quantize to
-    * exact milli-unit longs; each row emits its triangle products in-row
-    * and ONE hash-aggregate (map-side combined — the shuffle carries at
-    * most d(d+1)/2 rows per partition) sums them. A 1-in-m md5 hash
+    * exact milli-unit longs; the native [[graft.functions.GramMatrixAgg]]
+    * aggregate's buffer IS the triangle — no d(d+1)/2-per-row explode, the
+    * shuffle carries one ~16 KB buffer per partition. A 1-in-m md5 hash
     * sample caps the work at scale, with `sample_m` in the output so the
     * estimate is auditable (the capped-universe discipline); at the
     * tested SFs the products stay far inside LONG (q ≤ ~10³,
@@ -1554,34 +1464,13 @@ object VectorOps {
     val sampled = emb.filter(
       pmod(graft.ops.LlmOps.md5Hash48(col(idCol).cast("string"), 1),
         lit(sampleM.toLong)) === 0)
-    if (emb.sparkSession.catalog.functionExists("gram_matrix")) {
-      // native [[graft.functions.GramMatrixAgg]]: the aggregation buffer
-      // IS the triangle — no d(d+1)/2-per-row explode, the shuffle
-      // carries one ~16 KB buffer per partition (measured ~8× at the 10×
-      // probe). Output rows identical to the relational fallback.
-      sampled
-        .agg(call_function("gram_matrix", col(embCol), lit(dim)).as("__g"))
-        .select(col("__g.n").as("n_docs"), explode(col("__g.cells")).as("__c"))
-        .select(col("__c.i").as("i"), col("__c.j").as("j"), col("n_docs"),
-          col("__c.gram").as("gram"), lit(sampleM.toLong).as("sample_m"))
-        // empty-sample parity with the relational GROUP BY (zero rows,
-        // not a zero-filled triangle)
-        .filter(col("n_docs") > 0)
-    } else {
-      val quant = transform(col(embCol),
-        v => floor(v.cast("double") * lit(1000.0)).cast("long"))
-      val pairs = flatten(transform(sequence(lit(0), lit(dim - 1)), i =>
-        transform(sequence(i, lit(dim - 1)), j =>
-          struct(i.cast("long").as("i"), j.cast("long").as("j"),
-            (element_at(col("__q"), (i + 1).cast("int"))
-              * element_at(col("__q"), (j + 1).cast("int"))).as("p")))))
-      sampled.select(quant.as("__q"))
-        .select(explode(pairs).as("__pp"))
-        .groupBy(col("__pp.i").as("i"), col("__pp.j").as("j"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("__pp.p")).as("gram"))
-        .select(col("i"), col("j"), col("n_docs"), col("gram"),
-          lit(sampleM.toLong).as("sample_m"))
-    }
+    sampled
+      .agg(call_function("gram_matrix", col(embCol), lit(dim)).as("__g"))
+      .select(col("__g.n").as("n_docs"), explode(col("__g.cells")).as("__c"))
+      .select(col("__c.i").as("i"), col("__c.j").as("j"), col("n_docs"),
+        col("__c.gram").as("gram"), lit(sampleM.toLong).as("sample_m"))
+      // an empty sample is zero rows, not a zero-filled triangle
+      .filter(col("n_docs") > 0)
   }
 
   /** Maximum Mean Discrepancy between two embedding sub-corpora under the
@@ -1598,7 +1487,7 @@ object VectorOps {
     * (n_A·n_B)² and the 1000⁴ milli-quantization factor.
     *
     * Scale shape: two gram aggregates (the native buffer-per-partition
-    * path when registered), one ≤d(d+1)/2-row full-outer join, a 1-row
+    * `gram_matrix`), one ≤d(d+1)/2-row full-outer join, a 1-row
     * fold; the corpora never pairwise-join.
     */
   def mmdEmbeddingDrift(emb: DataFrame, idCol: String, embCol: String,
@@ -1704,7 +1593,6 @@ object VectorOps {
     */
   def hubnessAudit(points: DataFrame, idCol: String, embCol: String,
                    k: Int = 5): DataFrame = {
-    val spark = points.sparkSession
     val dec = DecimalType(38, 0)
     val ids = points.select(col(idCol).as("__pid"))
     val q = points.select(col(idCol).as("__qid"), col(embCol).as("__qv"))
@@ -1713,7 +1601,7 @@ object VectorOps {
     val occ = points.crossJoin(broadcast(q))
       .filter(col(idCol) =!= col("__qid"))
       .select(col("__qid"), col(idCol).as("__nid"),
-        cosineBest(spark, col(embCol), col("__qv")).as("__score"))
+        cosine(col(embCol), col("__qv")).as("__score"))
       .withColumn("__rn", row_number().over(byScore))
       .filter(col("__rn") <= k)
       .groupBy(col("__nid")).agg(count(lit(1)).as("__occ"))

@@ -13,42 +13,28 @@ import org.apache.spark.sql.functions._
   * guard (outlier mega-baskets are excluded, a documented census
   * decision, instead of silently detonating the shuffle; Savasere
   * VLDB'95 partitioned apriori makes the same cut). The expansion is
-  * IN-ROW over each basket's sorted item array ([[pairStructs]]) — a
-  * codegen'd higher-order function, not a basket self-join, so pair
-  * generation costs zero shuffles and the per-task memory is the capped
-  * basket array. Item frequencies join back by broadcast — the item
-  * dimension is vocabulary-sized, not corpus-sized.
+  * IN-ROW over each basket's sorted item array ([[orderedPairs]]) — a
+  * native expression, not a basket self-join, so pair generation costs
+  * zero shuffles and the per-task memory is the capped basket array.
+  * Item frequencies join back by broadcast — the item dimension is
+  * vocabulary-sized, not corpus-sized.
   */
 object Assoc {
 
-  /** All ordered-canonical pairs (a, b) with a before b from a SORTED
-    * array, as an array of structs — the in-row replacement for the
-    * classic pair-generation self-join. Stays entirely inside codegen'd
-    * higher-order functions; output size is C(n,2) structs for an n-item
-    * array, so callers must bound n (basket caps, per-order line limits,
-    * |languages|) — the same Σ n² budget the join shape had, minus its
-    * shuffle.
+  /** All value-ordered pairs (a, b) with a < b of an array, as
+    * `array<struct<a, b>>`, in one pass of the native
+    * [[graft.functions.OrderedPairs]] expression — the in-row replacement
+    * for the classic pair-generation self-join. Emission order is the
+    * nested loop's: for each element in position order, every element
+    * greater than it, in position order — so on a STRICTLY-ASCENDING
+    * array (sorted distinct items/supplier/language sets) it is exactly
+    * the position pairs i < j. A value occurring twice pairs once per
+    * occurrence; pairs with a null side are dropped; a null array yields
+    * null. Output size is up to C(n,2) structs for an n-item array, so
+    * callers must bound n (basket caps, per-order line limits,
+    * |languages|).
     */
-  def pairStructs(arr: Column): Column =
-    flatten(transform(arr, (x, i) =>
-      transform(slice(arr, i + lit(2), size(arr)),
-        y => struct(x.as("a"), y.as("b")))))
-
-  /** [[pairStructs]] through the native one-pass
-    * [[graft.functions.OrderedPairs]] when GraftExtensions is installed
-    * (r17) — the HOF shape above re-SLICES the array per position (O(n²)
-    * array copies) through two interpreted lambda layers. For the
-    * STRICTLY-ASCENDING arrays every caller feeds (sorted distinct
-    * items/supplier/language sets), position order i<j coincides with
-    * value order a<b, so `ordered_pairs` emits the identical struct
-    * array — same elements, same order (asserted by OrderedPairsSpec).
-    * Callers with possible duplicate values must use [[pairStructs]]:
-    * on ties the two forms differ.
-    */
-  def pairStructsBest(df: DataFrame, arr: Column): Column =
-    if (df.sparkSession.catalog.functionExists("ordered_pairs"))
-      call_function("ordered_pairs", arr)
-    else pairStructs(arr)
+  def orderedPairs(arr: Column): Column = call_function("ordered_pairs", arr)
 
   /** Frequent item PAIRS with support / confidence / lift:
     *
@@ -70,7 +56,7 @@ object Assoc {
     // basket-size window pass both collapse into this groupBy; the size
     // cap filters the collected array (same survivors: __sz counted
     // distinct presence rows per basket, which is the array's size).
-    // Sorted so pairStructs canonicalizes.
+    // Sorted so orderedPairs canonicalizes.
     val kept = df.select(col(basketCol).as("__b"), col(itemCol).as("__i"))
       .groupBy(col("__b"))
       .agg(sort_array(collect_set(col("__i"))).as("__items"))
@@ -81,7 +67,7 @@ object Assoc {
       .select(explode(col("__items")).as("__i"))
       .groupBy(col("__i")).agg(count(lit(1)).as("__ci"))
     val pairs = kept
-      .select(explode(pairStructsBest(df, col("__items"))).as("__p"))
+      .select(explode(orderedPairs(col("__items"))).as("__p"))
       .groupBy(col("__p.a").as("item_a"), col("__p.b").as("item_b"))
       .agg(count(lit(1)).as("n_pair"))
       .filter(col("n_pair") >= minPairCount)

@@ -23,11 +23,16 @@ import org.apache.spark.sql.execution.LogicalRDD
 private[graft] object Ckpt {
 
   /** Free the storage blocks behind an (already materialized) eager
-    * `localCheckpoint` Dataset. No-op for plans that do not read a
-    * checkpointed RDD. Non-blocking: removal proceeds asynchronously.
+    * `localCheckpoint` Dataset. Only a plan whose ROOT is the checkpointed
+    * RDD is released: a composite plan (a join or projection over one or
+    * more checkpoints) reads checkpoints that other Datasets still own, so
+    * it is left alone and the skip is logged. Non-blocking: removal
+    * proceeds asynchronously.
     */
-  def release(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
+  def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+    case other =>
+      org.apache.log4j.Logger.getLogger(getClass).warn(
+        s"Ckpt.release: plan root is ${other.nodeName}, not a checkpoint; nothing released")
+  }
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *
   * Contents per store:
   *   - signatures: (blk, id, sh: array<long>, sig: array<long>) — the
-  *     portable md5-48 [[LlmOps.minhashPlanBest]] projection of the
+  *     portable md5-48 [[LlmOps.minhashPlan]] projection of the
   *     deterministic 1-in-m sampled universe;
   *   - verified pairs: (id_a, id_b, jaccard) — the exact PPJoin pass
   *     ([[LlmOps.jaccardPairsFromSets]]) at `floorThreshold` over those
@@ -74,7 +74,7 @@ object DedupEvalStore {
         .repartition(spark.sessionState.conf.numShufflePartitions,
           col(idCol))
         .select(col(blockCol).as("blk"), col(idCol),
-          LlmOps.minhashPlanBest(docs, col(textCol), shingleN, numHashes)
+          LlmOps.minhashPlan(col(textCol), shingleN, numHashes)
             .as("__mh"))
         .select(col("blk"), col(idCol),
           col("__mh.sh").as("sh"), col("__mh.sig").as("sig"))

@@ -65,7 +65,7 @@ object Graph {
       lineitem
         .groupBy(col("l_orderkey"))
         .agg(sort_array(collect_set(col("l_suppkey"))).as("sks"))
-        .select(explode(Assoc.pairStructsBest(lineitem, col("sks"))).as("__p"))
+        .select(explode(Assoc.orderedPairs(col("sks"))).as("__p"))
         .groupBy(col("__p.a").as("a"), col("__p.b").as("b"))
         .agg(count(lit(1)).as("n_co"))
         .filter(col("n_co") >= minShared)

@@ -123,7 +123,7 @@ object LlmOps {
     */
   def signatureStore(base: DataFrame, idCol: String, textCol: String,
                      shingleN: Int = 3, numHashes: Int = 16): DataFrame =
-    base.select(col(idCol), minhashPlanBest(base, col(textCol), shingleN, numHashes).as("__mh"))
+    base.select(col(idCol), minhashPlan(col(textCol), shingleN, numHashes).as("__mh"))
       .select(col(idCol), col("__mh.sh").as("sh"), col("__mh.sig").as("sig"))
 
   /** [[incrementalNearDup]] against a PRE-COMPUTED signature store
@@ -145,7 +145,7 @@ object LlmOps {
       .select(col(idCol), col("sh").as("__sh"), col("sig").as("__sig"))
       .persist()
     val batchPlan = batch
-      .select(col(idCol), minhashPlanBest(batch, col(textCol), shingleN, numHashes).as("__mh"))
+      .select(col(idCol), minhashPlan(col(textCol), shingleN, numHashes).as("__mh"))
       .select(col(idCol), col("__mh.sh").as("__sh"), col("__mh.sig").as("__sig"))
       .persist()
     // Hot-band guard on the base side: a band key shared by > cap base
@@ -187,58 +187,16 @@ object LlmOps {
   /** Whitespace tokens of normalized text. */
   def tokens(c: Column): Column = split(normText(c), "\\s+")
 
-  /** Word n-gram shingles (distinct), the unit set for Jaccard/MinHash.
-    * `slice` with a computed 1-based start keeps this inside codegen'd
-    * higher-order functions — no UDF, no explode at this stage.
+  /** 64-bit hashed word n-gram shingles (distinct) via the native
+    * HashedShingles expression: one tight Java pass per doc, no
+    * per-shingle string allocation, and all downstream set ops (min-hash,
+    * intersect/union) run on longs instead of strings. This is the
+    * representation a 100 TB dedup run must use: shingle payload per doc
+    * is 8 bytes × |shingles|, not the text itself. One hash family for
+    * every session, so results never depend on how the session was built.
     */
-  def shingles(c: Column, n: Int): Column = {
-    val toks = tokens(c)
-    array_distinct(
-      transform(
-        sequence(lit(0), greatest(size(toks) - n, lit(0))),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-  }
-
-  /** 64-bit hashed shingles: token-level xxhash64 first, then one hash per
-    * n-gram window over the token-hash array. Equivalent set semantics to
-    * [[shingles]] (modulo negligible 64-bit collisions) at a fraction of the
-    * cost — no per-shingle string allocation, and all downstream set ops
-    * (min-hash, intersect/union) run on longs instead of strings. This is
-    * the representation a 100 TB dedup run must use: shingle payload per
-    * doc is 8 bytes × |shingles|, not the text itself.
-    */
-  def shingleHashes(c: Column, n: Int): Column = {
-    val th = transform(tokens(c), t => xxhash64(t))
-    array_distinct(
-      transform(
-        sequence(lit(0), greatest(size(th) - n, lit(0))),
-        i => xxhash64(slice(th, i + 1, lit(n)))))
-  }
-
-  /** [[shingleHashes]] via the native HashedShingles expression when
-    * GraftExtensions is installed (one tight Java pass; ~3x the HOF
-    * composition's throughput), HOF fallback otherwise. The two use
-    * different hash families — fine for every consumer here, which needs
-    * only stable well-mixed 64-bit set elements — so pick ONE per pipeline
-    * run, never mix within a comparison.
-    */
-  def shingleHashesBest(df: DataFrame, c: Column, n: Int): Column =
-    if (df.sparkSession.catalog.functionExists("hashed_shingles"))
-      call_function("hashed_shingles", c, lit(n))
-    else shingleHashes(c, n)
-
-  /** MinHash signature: k independent min-hashes over the shingle set.
-    * Seed-mixing via xxhash64(shingle, seed). One compact fold over the
-    * shingle array with an array<long> accumulator — O(k·|shingles|) work
-    * with an expression tree of constant size (a k-way list of separate
-    * min-expressions makes Catalyst analysis/codegen time explode).
-    */
-  def minhashSignature(shingleCol: Column, k: Int): Column =
-    aggregate(
-      shingleCol,
-      array_repeat(lit(Long.MaxValue), k),
-      (acc, sh) => zip_with(acc, sequence(lit(0), lit(k - 1)),
-        (m, j) => least(m, xxhash64(sh, j))))
+  def shingleHashes(c: Column, n: Int): Column =
+    call_function("hashed_shingles", c, lit(n))
 
   /** 48-bit integer from 12 hex chars of `md5(c)` at 1-based hex offset
     * `off` — the PORTABLE hash family: any ANSI-SQL engine reproduces it
@@ -250,47 +208,17 @@ object LlmOps {
   def md5Hash48(c: Column, off: Int): Column =
     conv(substring(md5(c), off, 12), 16, 10).cast("long")
 
-  /** Per-shingle portable hash pair (h1, h2): two independent 48-bit values
-    * cut from ONE md5 per shingle. The k-hash MinHash family is then
-    * h_j = h1 + j·h2 (Carter–Wegman style) — k hashes for the price of one
-    * digest, and a family any SQL oracle can replay digit for digit.
+  /** The full portable per-doc MinHash projection as one struct, via the
+    * native MinHashShingles expression (one tight Java pass over the text,
+    * one MessageDigest per shingle, no per-element boxing):
+    *  - `sh`: the distinct 48-bit shingle hashes (the Jaccard set);
+    *  - `sig`: the k-component signature, sig[j] = min over shingles of
+    *    h1 + j·h2, where (h1, h2) are two 48-bit values cut from ONE md5
+    *    per shingle (Carter–Wegman style) — k hashes for the price of one
+    *    digest, and a family any SQL oracle can replay digit for digit.
     */
-  def shinglePairs(c: Column, n: Int): Column =
-    transform(transform(shingles(c, n), s => md5(s)), m =>
-      struct(
-        conv(substring(m, 1, 12), 16, 10).cast("long").as("h1"),
-        conv(substring(m, 13, 12), 16, 10).cast("long").as("h2")))
-
-  /** MinHash signature over [[shinglePairs]]: sig[j] = min over shingles of
-    * (h1 + j·h2). Same constant-size fold shape as [[minhashSignature]].
-    */
-  def minhashSignaturePortable(pairCol: Column, k: Int): Column =
-    aggregate(
-      pairCol,
-      array_repeat(lit(Long.MaxValue), k),
-      (acc, p) => zip_with(acc, sequence(lit(0), lit(k - 1)),
-        (m, j) => least(m, p.getField("h1") + j * p.getField("h2"))))
-
-  /** The full portable per-doc MinHash projection: distinct 48-bit shingle
-    * hashes (the Jaccard set) plus the k-component signature, as one struct.
-    */
-  def minhashPlan(c: Column, n: Int, k: Int): Column = {
-    val pairs = shinglePairs(c, n)
-    struct(
-      array_distinct(transform(pairs, p => p.getField("h1"))).as("sh"),
-      minhashSignaturePortable(pairs, k).as("sig"))
-  }
-
-  /** [[minhashPlan]] via the native MinHashShingles expression when
-    * GraftExtensions is installed (one tight Java pass over the text — one
-    * MessageDigest per shingle, no per-element boxing), HOF fallback
-    * otherwise. Both produce IDENTICAL values (same md5 family), so plans
-    * may switch freely without affecting results — asserted by spec.
-    */
-  def minhashPlanBest(df: DataFrame, c: Column, n: Int, k: Int): Column =
-    if (df.sparkSession.catalog.functionExists("minhash_plan"))
-      call_function("minhash_plan", c, lit(n), lit(k))
-    else minhashPlan(c, n, k)
+  def minhashPlan(c: Column, n: Int, k: Int): Column =
+    call_function("minhash_plan", c, lit(n), lit(k))
 
   /** LSH banding: explode the signature into `bands` rows keyed by
     * (bandIdx, md5 of that band's comma-joined slice). Docs sharing any
@@ -361,7 +289,7 @@ object LlmOps {
     // of small parquet files (one file = one task otherwise).
     val sets = df
       .repartition(df.sparkSession.sessionState.conf.numShufflePartitions, col(idCol))
-      .select(col(idCol), minhashPlanBest(df, col(textCol), shingleN, numHashes).as("__mh"))
+      .select(col(idCol), minhashPlan(col(textCol), shingleN, numHashes).as("__mh"))
       .select(col(idCol), col("__mh.sh").as("__sh"), col("__mh.sig").as("__sig"))
     nearDupPairsFromSets(sets, idCol, bands, rowsPerBand, threshold, maxBucketSize)
   }
@@ -398,10 +326,9 @@ object LlmOps {
     * bucket costs the same as a capped one), then keep 2..maxBucketSize
     * buckets. This replaces the earlier count-census + join-back +
     * self-join shape: same survivorship, same bounded-memory guarantee,
-    * two fewer shuffles over the banding table. The HOF fallback (plain
-    * collect_list, extension not installed) is value-identical but
-    * materializes full hot-bucket lists before the filter — fine for
-    * tests, not the 100 TB path.
+    * two fewer shuffles over the banding table. Non-bigint ids take plain
+    * collect_list, value-identical but materializing full hot-bucket
+    * lists before the filter — fine for tests, not the 100 TB path.
     *
     * Pair emission is STREAMED: posexplode anchors id_a, the inner explode
     * emits its successors in the sorted list (id_a < id_b by
@@ -414,15 +341,14 @@ object LlmOps {
                                        bands: Int, rowsPerBand: Int,
                                        maxBucketSize: Int): DataFrame = {
     val banded = lshBands(withSets, idCol, "__sig", bands, rowsPerBand)
-    // The native saturating aggregate is bigint-only; for non-long id
-    // columns fall back to plain collect_list (unbounded buffers, same
-    // SURVIVORSHIP: the size <= cap filter below drops the same buckets
-    // the saturating path drops) rather than failing analysis on a type
-    // the extension-free path accepts.
+    // The native saturating aggregate is bigint-only; non-long id columns
+    // use plain collect_list (unbounded buffers, same SURVIVORSHIP: the
+    // size <= cap filter below drops the same buckets the saturating path
+    // drops) rather than failing analysis.
     val idIsLong = withSets.schema(idCol).dataType ==
       org.apache.spark.sql.types.LongType
     val collectIds =
-      if (idIsLong && banded.sparkSession.catalog.functionExists("bounded_collect_list"))
+      if (idIsLong)
         call_function("bounded_collect_list", col(idCol), lit(maxBucketSize))
       else collect_list(col(idCol))
     val buckets = banded.groupBy("band", "band_hash")
@@ -457,7 +383,7 @@ object LlmOps {
     val rowsPerBand = numHashes / bands
     val withSets = df
       .repartition(df.sparkSession.sessionState.conf.numShufflePartitions, col(idCol))
-      .select(col(idCol), minhashPlanBest(df, col(textCol), shingleN, numHashes).as("__mh"))
+      .select(col(idCol), minhashPlan(col(textCol), shingleN, numHashes).as("__mh"))
       .select(col(idCol), col("__mh.sh").as("__sh"), col("__mh.sig").as("__sig"))
       .filter(size(col("__sh")) > 0)
       .localCheckpoint(true)
@@ -504,7 +430,7 @@ object LlmOps {
     // order.
     jaccardPairsFromSets(
       df.select(col(blockCol).as("__blk"), col(idCol),
-        array_sort(shingleHashesBest(df, col(textCol), shingleN)).as("__sh")),
+        array_sort(shingleHashes(col(textCol), shingleN)).as("__sh")),
       idCol, threshold)
   }
 
@@ -581,34 +507,8 @@ object LlmOps {
   def simhash(df: DataFrame, idCol: String, textCol: String,
               bits: Int = 48): DataFrame = {
     require(bits >= 1 && bits <= 48, "portable md5-48 family carries 48 bits")
-    // Native simhash48 when GraftExtensions is installed (one JIT'd pass,
-    // one MessageDigest per token), HOF fold otherwise. Both produce
-    // IDENTICAL values (same md5-48 family) — asserted by spec.
-    val packed =
-      if (df.sparkSession.catalog.functionExists("simhash48"))
-        call_function("simhash48", col(textCol), lit(bits))
-      else simhashHof(col(textCol), bits)
-    df.select(col(idCol), packed.as("simhash"))
-  }
-
-  /** Interpreted HOF SimHash fold — the declarative twin of the native
-    * `simhash48` expression, kept as the no-extensions fallback and the
-    * parity-spec reference. Tokens are materialized once via a named
-    * lambda variable is not possible here (the fold captures the token
-    * array whole), so the multiset hash runs O(|tokens| × bits) lambdas.
-    */
-  def simhashHof(textCol: Column, bits: Int): Column = {
-    val hashes = transform(tokens(textCol), t => md5Hash48(t, 1))
-    val bitVotes = aggregate(
-      hashes,
-      array_repeat(lit(0), bits),
-      (acc, h) => zip_with(acc, sequence(lit(0), lit(bits - 1)),
-        (c, i) => c + when(call_function("shiftright", h, i).bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1)))
-    aggregate(
-      zip_with(bitVotes, sequence(lit(0), lit(bits - 1)),
-        (c, i) => when(c > 0, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))),
-      lit(0L),
-      (acc, b) => acc + b)
+    df.select(col(idCol),
+      call_function("simhash48", col(textCol), lit(bits)).as("simhash"))
   }
 
   /** SimHash near-duplicate pairs via pigeonhole banding: split the
@@ -660,14 +560,14 @@ object LlmOps {
     // candidate generation at O(buckets · cap²) when homogeneous corpora
     // (boilerplate, templated text) collapse many sketches onto one band
     // value.
-    // Native path is bigint-only AND the two collected lists must saturate
+    // The native aggregate is bigint-only AND the two lists must saturate
     // identically to stay index-aligned — so a non-long id column forces
     // BOTH collects onto plain collect_list (same survivorship via the
     // size filter below; unbounded buffers are the price of exotic ids).
     val idIsLong = banded.schema(idCol).dataType ==
       org.apache.spark.sql.types.LongType
     def collectLongs(c: Column) =
-      if (idIsLong && df.sparkSession.catalog.functionExists("bounded_collect_list"))
+      if (idIsLong)
         call_function("bounded_collect_list", c, lit(maxBucketSize))
       else collect_list(c)
     val buckets = banded.groupBy("band", "band_val")
@@ -943,7 +843,7 @@ object LlmOps {
       .agg(slice(sort_array(collect_list(col("term"))), 1, perDocCap).as("__ts"))
       .filter(size(col("__ts")) >= 2)
     val pairCounts = arrs
-      .select(explode(orderedPairsBest(docs, col("__ts"))).as("__p"))
+      .select(explode(Assoc.orderedPairs(col("__ts"))).as("__p"))
       .groupBy(col("__p.a").as("term_a"), col("__p.b").as("term_b"))
       .agg(count(lit(1)).as("n_pair"))
     pairCounts
@@ -971,34 +871,14 @@ object LlmOps {
       sequence(lit(0), greatest(size(tokenCol) - n, lit(0))),
       i => md5Hash48(concat_ws(" ", slice(tokenCol, i + 1, lit(n))), 1))
 
-  /** [[shingleHashSeq]] over raw TEXT via the native ShingleSeq expression
-    * when GraftExtensions is installed (one MessageDigest pass per doc; the
-    * HOF path re-runs an interpreted concat/md5/conv tree per window), HOF
-    * `shingleHashSeq(tokens(c), n)` fallback otherwise. Both produce
-    * IDENTICAL values (same md5-48 family, same positional non-distinct
-    * stream) — asserted bitwise by ShingleSeqSpec — so plans may switch
-    * freely without affecting results.
+  /** [[shingleHashSeq]] over raw TEXT via the native ShingleSeq
+    * expression: one MessageDigest pass per doc, bitwise the values of
+    * `shingleHashSeq(tokens(c), n)` (same md5-48 family, same positional
+    * non-distinct stream — asserted by ShingleSeqSpec) without re-running
+    * an interpreted concat/md5/conv tree per window.
     */
-  def shingleSeqBest(df: DataFrame, c: Column, n: Int): Column =
-    if (df.sparkSession.catalog.functionExists("shingle_seq"))
-      call_function("shingle_seq", c, lit(n))
-    else shingleHashSeq(tokens(c), n)
-
-  /** All value-ordered pairs of an array as `array<struct<a, b>>` — the
-    * native one-pass [[graft.functions.OrderedPairs]] when GraftExtensions
-    * is installed, the nested-HOF composition otherwise. Both emit the
-    * SAME pair multiset in the SAME order (the expression replicates the
-    * HOF's position-order emission, null-pair drops, and null-array
-    * propagation — asserted by OrderedPairsSpec), so plans may switch
-    * freely without affecting results.
-    */
-  def orderedPairsBest(df: DataFrame, arr: Column): Column =
-    if (df.sparkSession.catalog.functionExists("ordered_pairs"))
-      call_function("ordered_pairs", arr)
-    else
-      flatten(transform(arr, a =>
-        filter(transform(arr, b => struct(a.as("a"), b.as("b"))),
-          p => p.getField("a") < p.getField("b"))))
+  def shingleSeq(c: Column, n: Int): Column =
+    call_function("shingle_seq", c, lit(n))
 
   /** Winnowing fingerprints (MOSS-style): the minimum shingle hash in each
     * sliding window of `w` consecutive shingles, deduplicated. Guarantees
@@ -1022,7 +902,7 @@ object LlmOps {
     */
   def winnowCounts(df: DataFrame, idCol: String, textCol: String,
                    shingleN: Int, w: Int): DataFrame =
-    df.select(col(idCol), shingleSeqBest(df, col(textCol), shingleN).as("__shseq"))
+    df.select(col(idCol), shingleSeq(col(textCol), shingleN).as("__shseq"))
       .select(col(idCol),
         transform(
           sequence(lit(0), greatest(size(col("__shseq")) - w, lit(0))),
@@ -1061,12 +941,12 @@ object LlmOps {
         i => array_min(slice(c, i + 1, lit(w)))))
     val docPost = docs
       .select(col(idCol),
-        shingleSeqBest(docs, col(textCol), shingleN).as("__seq"))
+        shingleSeq(col(textCol), shingleN).as("__seq"))
       .select(col(idCol), explode(winnowed(col("__seq"))).as("__fp"))
       .filter(col("__fp").isNotNull)
     val qPost = queries
       .select(col(queryIdCol).as("query_id"),
-        shingleSeqBest(queries, col(snippetCol), shingleN).as("__seq"))
+        shingleSeq(col(snippetCol), shingleN).as("__seq"))
       .select(col("query_id"), explode(winnowed(col("__seq"))).as("__fp"))
       .filter(col("__fp").isNotNull)
     val qSizes = qPost.groupBy(col("query_id"))
@@ -1089,7 +969,7 @@ object LlmOps {
     */
   def repetitionScore(df: DataFrame, idCol: String, textCol: String,
                       shingleN: Int = 3): DataFrame =
-    df.select(col(idCol), shingleSeqBest(df, col(textCol), shingleN).as("__s"))
+    df.select(col(idCol), shingleSeq(col(textCol), shingleN).as("__s"))
       .select(col(idCol),
         size(col("__s")).cast("long").as("n_shingles"),
         size(array_distinct(col("__s"))).cast("long").as("n_distinct"))
@@ -1141,14 +1021,14 @@ object LlmOps {
     // (k=1, signature unused) — bitwise the same md5-48 values the HOF
     // shingleHashSeq path produced, one MessageDigest pass per doc instead
     // of four nested interpreted HOFs; `sh` is already distinct, so no
-    // array_distinct stage. HOF fallback when the extension isn't loaded.
+    // array_distinct stage.
     val benchSet = benchmark
-      .select(explode(minhashPlanBest(benchmark, col(benchTextCol), shingleN, 1)
+      .select(explode(minhashPlan(col(benchTextCol), shingleN, 1)
         .getField("sh")).as("__bsh"))
       .distinct()
     val docSets = docs
       .select(col(idCol),
-        minhashPlanBest(docs, col(textCol), shingleN, 1).getField("sh").as("__sh"))
+        minhashPlan(col(textCol), shingleN, 1).getField("sh").as("__sh"))
     contaminationFromSets(docSets, idCol, benchSet)
   }
 
@@ -1212,7 +1092,7 @@ object LlmOps {
       transform(sequence(lit(0), lit(k - 1)),
         j => pmod((lit(2) * j + lit(3)) * h + j, lit(bits.toLong)))
     val benchSh = benchmark
-      .select(explode(minhashPlanBest(benchmark, col(benchTextCol), shingleN, 1)
+      .select(explode(minhashPlan(col(benchTextCol), shingleN, 1)
         .getField("sh")).as("__bh1"))
       .distinct()
     val benchBits = benchSh
@@ -1223,7 +1103,7 @@ object LlmOps {
     // nearDupPairs (callers clearCache() when done).
     val docSh = docs
       .select(col(idCol),
-        explode(minhashPlanBest(docs, col(textCol), shingleN, 1)
+        explode(minhashPlan(col(textCol), shingleN, 1)
           .getField("sh")).as("__h1"))
       .localCheckpoint(true)
     val sizes = docSh.groupBy(idCol).agg(count(lit(1)).as("n_shingles"))
@@ -1668,10 +1548,9 @@ object LlmOps {
     // three; their stages launch concurrently, which a lazy persist does
     // not survive (r17).
     // Bigram hashes come from the native positional shingle_seq expression
-    // (one MessageDigest pass per doc; HOF fallback with pre-materialized
-    // tokens when the extension isn't loaded — identical values).
+    // (one MessageDigest pass per doc).
     val docBg = df
-      .select(col(idCol), explode(shingleSeqBest(df, col(textCol), 2)).as("__bg"))
+      .select(col(idCol), explode(shingleSeq(col(textCol), 2)).as("__bg"))
       .localCheckpoint(true)
     val counts = docBg.groupBy("__bg").agg(count(lit(1)).as("__c"))
     // total bigram instances == the stream's row count (cheaper than
@@ -1743,7 +1622,7 @@ object LlmOps {
     // subtree before a lazy cache populated
     val pairs = df
       .select(col(groupCol).as("__g"),
-        explode(shingleHashesBest(df, col(textCol), shingleN)).as("__sh"))
+        explode(shingleHashes(col(textCol), shingleN)).as("__sh"))
       .distinct()
       .localCheckpoint(true)
     val sizes = pairs.groupBy("__g").agg(count(lit(1)).as("__n"))
@@ -1755,7 +1634,7 @@ object LlmOps {
     val inter = pairs
       .groupBy("__sh").agg(collect_set(col("__g")).as("__gs"))
       .filter(size(col("__gs")) >= 2)
-      .select(explode(orderedPairsBest(df, col("__gs"))).as("__p"))
+      .select(explode(Assoc.orderedPairs(col("__gs"))).as("__p"))
       .select(col("__p.a").as("__g"), col("__p.b").as("__g2"))
       .groupBy("__g", "__g2")
       .agg(count(lit(1)).as("n_inter"))
@@ -1788,11 +1667,10 @@ object LlmOps {
   def ngramDupRate(df: DataFrame, idCol: String, textCol: String,
                    shingleN: Int = 3): DataFrame = {
     // distinct shingle-hash set via the native one-pass minhash_plan
-    // expression when registered (k=1: the signature side is unused),
-    // HOF fallback otherwise — bitwise-identical either way
+    // expression (k=1: the signature side is unused)
     val sh = df
       .select(col(idCol),
-        explode(minhashPlanBest(df, col(textCol), shingleN, 1)
+        explode(minhashPlan(col(textCol), shingleN, 1)
           .getField("sh")).as("__h"))
     // per-doc sets are distinct, so count(*) per hash == document frequency
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("__h"))
@@ -1823,7 +1701,7 @@ object LlmOps {
                    shingleN: Int = 3): DataFrame = {
     val sh = df
       .select(col(idCol),
-        posexplode(shingleSeqBest(df, col(textCol), shingleN)).as(Seq("__pos", "__h")))
+        posexplode(shingleSeq(col(textCol), shingleN)).as(Seq("__pos", "__h")))
     val wh = org.apache.spark.sql.expressions.Window.partitionBy(col("__h"))
     val wd = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol)).orderBy(col("__pos"))
@@ -1867,7 +1745,7 @@ object LlmOps {
   def dedupSpansApply(docs: DataFrame, idCol: String, textCol: String,
                       shingleN: Int = 3): DataFrame = {
     val sh = docs.select(col(idCol),
-      posexplode(shingleSeqBest(docs, col(textCol), shingleN))
+      posexplode(shingleSeq(col(textCol), shingleN))
         .as(Seq("__pos", "__h")))
     val own = sh.groupBy(col("__h"))
       .agg(min(col(idCol)).as("__owner"), count(lit(1)).as("__cnt"))
@@ -1912,7 +1790,7 @@ object LlmOps {
         length(col("__x")).as("__len"),
         (regexp_count(col("__x"), lit("[a-z]")).cast("double") /
           length(col("__x")).cast("double")).as("__alpha"),
-        shingleSeqBest(df, col("__x"), shingleN).as("__s"))
+        shingleSeq(col("__x"), shingleN).as("__s"))
       .select(col(groupCol), col("__len"), col("__alpha"),
         (lit(1.0) - size(array_distinct(col("__s"))).cast("double") /
           size(col("__s")).cast("double")).as("__rep"))
@@ -2104,7 +1982,7 @@ object LlmOps {
     val sets = df
       .repartition(df.sparkSession.sessionState.conf.numShufflePartitions, col(idCol))
       .select(col(blockCol).as("__blk"), col(idCol),
-        minhashPlanBest(df, col(textCol), shingleN, numHashes).as("__mh"))
+        minhashPlan(col(textCol), shingleN, numHashes).as("__mh"))
       .select(col("__blk"), col(idCol),
         col("__mh.sh").as("__sh"), col("__mh.sig").as("__sig"))
       .filter(size(col("__sh")) > 0)
@@ -2635,7 +2513,7 @@ object LlmOps {
     // SAMPLED variant below cannot make this swap — there the hash value
     // IS the sampling key and must stay engine-portable md5-48.
     val hashed = df.select(col(langCol).as("__lang"),
-      explode(shingleHashesBest(df, col(textCol), shingleN)).as("__h"))
+      explode(shingleHashes(col(textCol), shingleN)).as("__h"))
     crossLangFromHashed(hashed)
   }
 
@@ -2660,7 +2538,7 @@ object LlmOps {
     // it comes from the native minhash_plan pass — identical values, one
     // tight Java loop per doc instead of string-row explode + md5 column
     val hashed = df.select(col(langCol).as("__lang"),
-        explode(minhashPlanBest(df, col(textCol), shingleN, 1)
+        explode(minhashPlan(col(textCol), shingleN, 1)
           .getField("sh")).as("__h"))
     val filtered = if (num >= den) hashed
       else hashed.filter(pmod(col("__h"), lit(den)) < num)
@@ -2687,7 +2565,7 @@ object LlmOps {
       .groupBy(col("__lang")).agg(count(lit(1)).as("__c"))
     val shared = byFp
       .filter(size(col("__ls")) >= 2)
-      .select(explode(Assoc.pairStructsBest(byFp, col("__ls"))).as("__p"))
+      .select(explode(Assoc.orderedPairs(col("__ls"))).as("__p"))
       .groupBy(col("__p.a").as("lang_a"), col("__p.b").as("lang_b"))
       .agg(count(lit(1)).as("n_shared"))
     shared
@@ -3114,7 +2992,7 @@ object LlmOps {
         "exactRepresentatives composition, or containmentAuto (routes by " +
         "this same statistic), or raise the conf deliberately.")
     val sets = df.select(col(blockCol).as("__blk"), col(idCol),
-        array_sort(shingleHashesBest(df, col(textCol), shingleN)).as("__sh"))
+        array_sort(shingleHashes(col(textCol), shingleN)).as("__sh"))
       .withColumn("__sz", size(col("__sh")))
       .filter(col("__sz") > 0)
       .localCheckpoint(true)
@@ -3188,7 +3066,7 @@ object LlmOps {
     // shingle+md5 pipeline per row (measured ~2× the build cost); above
     // the cache it tests the stored column
     val hs = df.select(col(blockCol).as("__blk"), col(idCol),
-        minhashPlanBest(df, col(textCol), shingleN, 1)
+        minhashPlan(col(textCol), shingleN, 1)
           .getField("sh").as("__hs"))
       .localCheckpoint(true)  // feeds probe + posting sides (nearDupPairs contract:
                   // callers clearCache() when done)
@@ -3429,12 +3307,11 @@ object LlmOps {
                    textCol: String, shingleN: Int = 2,
                    buckets: Int = 8192): DataFrame = {
     require(shingleN >= 1 && buckets > 0)
-    def bucketSeq(df: DataFrame): Column =
-      transform(shingleSeqBest(df, col(textCol), shingleN),
-        h => pmod(h, lit(buckets.toLong)))
+    val bucketSeq = transform(shingleSeq(col(textCol), shingleN),
+      h => pmod(h, lit(buckets.toLong)))
     def census(df: DataFrame): IndexedSeq[Long] = {
       val arr = Array.fill(buckets)(0L)
-      df.select(explode(bucketSeq(df)).as("__b"))
+      df.select(explode(bucketSeq).as("__b"))
         .groupBy(col("__b")).agg(count(lit(1)).as("__c"))
         .collect()
         .foreach(r => arr(r.getLong(0).toInt) = r.getLong(1))
@@ -3442,8 +3319,7 @@ object LlmOps {
     }
     val tLit = typedlit(census(target))
     val sLit = typedlit(census(source))
-    val bs = bucketSeq(source)
-    source.select(col(idCol), bs.as("__bs"))
+    source.select(col(idCol), bucketSeq.as("__bs"))
       .select(col(idCol),
         size(col("__bs")).cast("long").as("n_grams"),
         aggregate(col("__bs"), lit(0L),

@@ -24,11 +24,11 @@ import graft.sources.PagedApi.PagedApiClient
   * credentials and zero vendored clients. `--run-date` (ISO, optional)
   * pins the meetings watermark date for reproducible backfills.
   *
-  * The session is built cluster-shaped, NOT hardcoded local: master,
-  * shuffle partitions, and memory come from spark-submit / cluster
-  * defaults; only the graft extensions and the confs the engine's
-  * operators rely on (AQE + skew-join handling) are set here, and only
-  * as session confs a submit-time `--conf` still overrides.
+  * The session is [[graft.Session.cluster]], NOT hardcoded local:
+  * master, shuffle partitions, and memory come from spark-submit /
+  * cluster defaults; only the graft extensions and the confs the engine's
+  * operators rely on (AQE + skew-join handling) are set, and only as
+  * session confs a submit-time `--conf` still overrides.
   */
 object GraftMain {
   final case class Cli(flags: ZoomRunner.JobFlags, warehouse: String,
@@ -78,12 +78,7 @@ object GraftMain {
 
   def main(args: Array[String]): Unit = {
     val cli = parse(args)
-    val spark = SparkSession.builder()
-      .appName("graft-zoom")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .getOrCreate()
+    val spark = graft.Session.cluster("graft-zoom")
     // Not try/finally around sys.exit: System.exit never returns (it halts
     // the JVM while shutdown hooks run), so a finally there is dead code
     // and stop() would silently rely on Spark's own shutdown hook. Stop

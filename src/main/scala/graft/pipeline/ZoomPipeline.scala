@@ -4,7 +4,7 @@ import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, DateType, LongType, StringType, StructField, StructType}
 
 import graft.ops.{Ingest, Relational, Temporal}
 import graft.schemas.Schemas
@@ -46,7 +46,27 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  def table(table: String): DataFrame = spark.read.parquet(path(table))
+  /** Read schemas of the partitioned tables: the declared data columns,
+    * then the partition column at a declared type. A declared schema
+    * turns off Spark's partition-value type inference, which parses a
+    * meeting_uuid made of digits and one `e` (`123e4567…`) as a decimal
+    * with a huge exponent and then spins on it for minutes. `run_date`
+    * keeps the date type inference gives it; `meeting_id` is the bigint
+    * it is written as (inference would make small ids int).
+    */
+  private val partitionedSchemas: Map[String, StructType] = {
+    def withPartition(s: StructType, c: String, t: DataType) =
+      StructType(s.filterNot(_.name == c) :+ StructField(c, t))
+    Map(
+      "meetings" -> withPartition(Schemas.meetings, "run_date", DateType),
+      "participants" -> withPartition(Schemas.participants, "meeting_uuid", StringType),
+      "meeting_settings" -> withPartition(Schemas.meetingSettings, "meeting_id", LongType),
+      "group_members" -> withPartition(Schemas.groupMembers, "group_id", StringType))
+  }
+
+  def table(table: String): DataFrame =
+    partitionedSchemas.get(table).fold(spark.read)(spark.read.schema)
+      .parquet(path(table))
 
   /** Raw JSON pages → typed rows via declared schema; union-of-pages
     * tolerates per-page drift (SURVEY.md §1.3).

@@ -130,7 +130,7 @@ private[graft] object QShared {
       .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
       .select(col("doc_id"), col("lang"), col("n_chars"), col("text"),
         size(LlmOps.tokens(col("text"))).as("__ntok"),
-        LlmOps.minhashPlanBest(corpus, col("text"), 3, 16).as("__mh"))
+        LlmOps.minhashPlan(col("text"), 3, 16).as("__mh"))
       .withColumn("__nsh", greatest(col("__ntok") - 3, lit(0)) + 1)
       .withColumn("__rep",
         lit(1.0) - size(col("__mh.sh")).cast("double") / col("__nsh").cast("double"))
@@ -153,7 +153,7 @@ private[graft] object QShared {
         .filter(col("keep")).select("doc_id"),
       "doc_id")
     val benchSet = bench.select(
-        explode(LlmOps.minhashPlanBest(bench, col("text"), 3, 16).getField("sh")).as("__bsh"))
+        explode(LlmOps.minhashPlan(col("text"), 3, 16).getField("sh")).as("__bsh"))
       .distinct()
     afterNear.join(
       LlmOps.contaminationFromSets(

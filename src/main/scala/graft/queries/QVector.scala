@@ -77,7 +77,7 @@ private[graft] object QVector {
     val vec = emb.crossJoin(broadcast(qe))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("doc_id"),
-        VectorOps.cosineBest(s, col("embedding"), col("__qv")).as("__score"))
+        VectorOps.cosine(col("embedding"), col("__qv")).as("__score"))
       .withColumn("rank", row_number().over(wv))
       .filter(col("rank") <= 20)
       .select(col("query_id"), col("doc_id"), col("rank"))

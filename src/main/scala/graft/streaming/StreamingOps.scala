@@ -126,8 +126,7 @@ object StreamingOps {
                       assigned: DataFrame, centroids: DataFrame,
                       idCol: String, embCol: String,
                       k: Int, nProbe: Int): DataFrame = {
-    import graft.functions.VectorOps.cosineBest
-    val spark = assigned.sparkSession
+    import graft.functions.VectorOps.cosine
     val cents: Seq[Seq[Float]] = centroids.orderBy("__cell").collect()
       .map(_.getSeq[Float](1).toIndexedSeq).toIndexedSeq
     require(cents.nonEmpty, "annEnrichStream: empty centroid table")
@@ -139,7 +138,7 @@ object StreamingOps {
     // negation, so idCol may be any orderable type (a negated id was an
     // analysis error for string ids and overflowed at Long.MinValue —
     // ADVICE r14). NULLS ORDER LAST on both fields explicitly: a null
-    // score (cosineBest over a null embedding) made every score branch
+    // score (cosine over a null embedding) made every score branch
     // evaluate null→false and fall through to the id, which is
     // intransitive against scored elements and leaves array_sort
     // undefined (ADVICE r15) — the explicit isNull branches restore a
@@ -156,7 +155,7 @@ object StreamingOps {
     // batch probe order
     val cellScores = transform(sequence(lit(0), lit(nCells - 1)), j =>
       struct(
-        cosineBest(spark, element_at(cLit, j + 1), col(qVecCol)).as("s"),
+        cosine(element_at(cLit, j + 1), col(qVecCol)).as("s"),
         j.as("id")))
     val probes = slice(array_sort(cellScores, bestFirst), 1,
       math.min(nProbe, nCells))
@@ -171,7 +170,7 @@ object StreamingOps {
           col(embCol).as("__nv")),
         Seq("__cell"))
       .select(col(tsCol), col("__qid"), col("__nid"),
-        cosineBest(spark, col("__nv"), col("__qv")).as("__score"))
+        cosine(col("__nv"), col("__qv")).as("__score"))
     cand
       .groupBy(window(col(tsCol), width), col("__qid"))
       .agg(slice(array_sort(collect_list(
@@ -1159,7 +1158,7 @@ object StreamingOps {
     implicit val bcEnc: org.apache.spark.sql.Encoder[BandCollision] =
       org.apache.spark.sql.Encoders.product[BandCollision]
     val sig = docs.select(col(idCol).as("docId"),
-      graft.ops.LlmOps.minhashPlanBest(docs, col(textCol), shingleN, numHashes)
+      graft.ops.LlmOps.minhashPlan(col(textCol), shingleN, numHashes)
         .getField("sig").as("__sig"))
     graft.ops.LlmOps.lshBands(sig, "docId", "__sig", bands, rowsPerBand)
       .select(col("docId"), col("band").cast("int").as("band"),

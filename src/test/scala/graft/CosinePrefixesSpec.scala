@@ -36,9 +36,9 @@ class CosinePrefixesSpec extends SparkTestBase {
         Seq.fill(64)(rng.nextGaussian().toFloat)))
       .toDF("id", "a", "b")
     val mismatches = df.select($"id",
-        VectorOps.cosinePrefixesBest(spark, $"a", $"b", dims).as("one"),
+        VectorOps.cosinePrefixes($"a", $"b", dims).as("one"),
         slicedCosines($"a", $"b").as("old"),
-        array(dims.map(d => VectorOps.cosine(
+        array(dims.map(d => HofTwins.cosine(
           slice($"a", lit(1), lit(d)), slice($"b", lit(1), lit(d)))): _*).as("hof"))
       .filter($"one" =!= $"old" || $"one" =!= $"hof") // any ulp difference fails
       .count()
@@ -56,7 +56,7 @@ class CosinePrefixesSpec extends SparkTestBase {
       (3L, a64, a64))
       .toDF("id", "a", "b")
     val out = df.select($"id",
-        VectorOps.cosinePrefixesBest(spark, $"a", $"b", dims).as("one"),
+        VectorOps.cosinePrefixes($"a", $"b", dims).as("one"),
         slicedCosines($"a", $"b").as("old"))
       .as[(Long, Seq[Option[Double]], Seq[Option[Double]])].collect()
     out.foreach { case (id, one, old) =>
@@ -75,7 +75,7 @@ class CosinePrefixesSpec extends SparkTestBase {
     val b = Seq.fill(64)(1.0f)
     val df = Seq((1L, a, b)).toDF("id", "a", "b")
     val (one, old) = df.select(
-        VectorOps.cosinePrefixesBest(spark, $"a", $"b", dims).as("one"),
+        VectorOps.cosinePrefixes($"a", $"b", dims).as("one"),
         slicedCosines($"a", $"b").as("old"))
       .as[(Seq[Double], Seq[Double])].head()
     assert(one == old)
@@ -90,7 +90,7 @@ class CosinePrefixesSpec extends SparkTestBase {
       (2L, None: Option[Seq[Float]], Some(Seq.fill(64)(1.0f))))
       .toDF("id", "a", "b")
     val exploded = df.select($"id",
-        posexplode(VectorOps.cosinePrefixesBest(spark, $"a", $"b", dims))
+        posexplode(VectorOps.cosinePrefixes($"a", $"b", dims))
           .as(Seq("p", "s")))
     assert(exploded.count() == 2L * dims.size)
     val nullRow = exploded.filter($"id" === 2L).as[(Long, Int, Option[Double])].collect()

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorOps
-
 /** Native codegen'd cosine_sim: registration via GraftExtensions, bitwise
   * parity with the HOF composition, and a sanity throughput comparison.
   */
@@ -27,7 +25,7 @@ class CosineSimilaritySpec extends SparkTestBase {
     val both = df.select(
       $"id",
       call_function("cosine_sim", $"a", $"b").as("native"),
-      VectorOps.cosine($"a", $"b").as("hof"))
+      HofTwins.cosine($"a", $"b").as("hof"))
     val mismatches = both
       .filter($"native" =!= $"hof") // bitwise: any ulp difference fails
       .count()
@@ -45,7 +43,7 @@ class CosineSimilaritySpec extends SparkTestBase {
       .toDF("id", "a", "b")
     val out = df.select($"id",
         call_function("cosine_sim", $"a", $"b").as("native"),
-        VectorOps.cosine($"a", $"b").as("hof"))
+        HofTwins.cosine($"a", $"b").as("hof"))
       .as[(Long, Double, Double)].collect()
     out.foreach { case (id, n, h) =>
       assert(n == 0.0 && h == 0.0, s"row $id: native=$n hof=$h")
@@ -60,7 +58,7 @@ class CosineSimilaritySpec extends SparkTestBase {
       .toDF("id", "a", "b")
     val out = df.select($"id",
         call_function("cosine_sim", $"a", $"b").as("native"),
-        VectorOps.cosine($"a", $"b").as("hof"))
+        HofTwins.cosine($"a", $"b").as("hof"))
       .as[(Long, Option[Double], Option[Double])].collect()
     out.foreach { case (id, native, hof) =>
       assert(native == hof, s"row $id diverged: native=$native hof=$hof")
@@ -94,9 +92,9 @@ class CosineSimilaritySpec extends SparkTestBase {
       System.nanoTime() - t0
     }
     // warm both paths once, then measure
-    timeIt(call_function("cosine_sim", $"a", $"b")); timeIt(VectorOps.cosine($"a", $"b"))
+    timeIt(call_function("cosine_sim", $"a", $"b")); timeIt(HofTwins.cosine($"a", $"b"))
     val native = timeIt(call_function("cosine_sim", $"a", $"b"))
-    val hof = timeIt(VectorOps.cosine($"a", $"b"))
+    val hof = timeIt(HofTwins.cosine($"a", $"b"))
     info(f"native=${native / 1e6}%.1f ms hof=${hof / 1e6}%.1f ms")
     assert(native <= hof * 2, s"native unexpectedly slow: $native vs $hof")
     df.unpersist()

@@ -208,7 +208,7 @@ class IvfStoreSpec extends SparkTestBase {
     // under generation 1's quantizer (same deterministic fit)
     val fit = VectorOps.ivfFit(g1, "embedding", 8, 42L, 4096, 10)
     val want = g2.withColumn("__cell",
-        VectorOps.nearestCell(spark, col("embedding").cast("array<double>"), fit))
+        VectorOps.nearestCell(col("embedding").cast("array<double>"), fit))
       .select(col("vec_id"), col("__cell")).collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(got.toSet == want)

@@ -345,7 +345,7 @@ class LlmOpsSpec extends SparkTestBase {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     // brute-force oracle: all same-block pairs with true shingle jaccard >= 0.5
     val sets = docs.select($"doc_id", $"source",
-        LlmOps.shingles($"text", 3).as("sh"))
+        HofTwins.shingles($"text", 3).as("sh"))
       .as[(Long, String, Seq[String])].collect()
     val expected = (for {
       (a, sa, sha) <- sets; (b, sb, shb) <- sets

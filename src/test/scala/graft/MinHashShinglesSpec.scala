@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.LlmOps
-
 /** Native minhash_plan: registration, exact (bitwise) parity with the HOF
   * composition on whitespace-edge fixtures and a random corpus, the
   * HashedShingles cardinality-parity fix, and a throughput sanity check.
@@ -38,7 +36,7 @@ class MinHashShinglesSpec extends SparkTestBase {
   test("native == HOF bitwise on whitespace-edge fixtures (sh AND sig)") {
     val both = edgeDocs.select($"doc_id",
       call_function("minhash_plan", $"text", lit(3), lit(16)).as("native"),
-      LlmOps.minhashPlan($"text", 3, 16).as("hof"))
+      HofTwins.minhashPlan($"text", 3, 16).as("hof"))
     val rows = both.select($"doc_id",
         $"native.sh", $"native.sig", $"hof.sh", $"hof.sig")
       .as[(Long, Seq[Long], Seq[Long], Seq[Long], Seq[Long])].collect()
@@ -54,7 +52,7 @@ class MinHashShinglesSpec extends SparkTestBase {
         i => concat(lit("w"), pmod(xxhash64($"id", i), lit(50))))).as("text"))
     val diverged = docs.select(
         call_function("minhash_plan", $"text", lit(3), lit(16)).as("native"),
-        LlmOps.minhashPlan($"text", 3, 16).as("hof"))
+        HofTwins.minhashPlan($"text", 3, 16).as("hof"))
       .filter($"native" =!= $"hof")
       .count()
     assert(diverged == 0)
@@ -63,7 +61,7 @@ class MinHashShinglesSpec extends SparkTestBase {
   test("HashedShingles cardinality matches HOF on whitespace edges (ADVICE fix)") {
     val counts = edgeDocs.select($"doc_id",
         size(call_function("hashed_shingles", $"text", lit(3))).as("native_n"),
-        size(LlmOps.shingleHashes($"text", 3)).as("hof_n"))
+        size(HofTwins.shingleHashes($"text", 3)).as("hof_n"))
       .as[(Long, Int, Int)].collect()
     counts.foreach { case (id, nat, hof) =>
       assert(nat == hof, s"doc $id shingle count diverged: native=$nat hof=$hof")
@@ -82,7 +80,7 @@ class MinHashShinglesSpec extends SparkTestBase {
       .toDF("doc_id", "text")
     val native = docs.select($"doc_id",
       call_function("minhash_plan", $"text", lit(3), lit(16)).as("m"))
-    val hof = docs.select($"doc_id", LlmOps.minhashPlan($"text", 3, 16).as("m"))
+    val hof = docs.select($"doc_id", HofTwins.minhashPlan($"text", 3, 16).as("m"))
     assert(native.exceptAll(hof).isEmpty && hof.exceptAll(native).isEmpty)
   }
 
@@ -98,9 +96,9 @@ class MinHashShinglesSpec extends SparkTestBase {
       System.nanoTime() - t0
     }
     timeIt(call_function("minhash_plan", $"text", lit(3), lit(16)))
-    timeIt(LlmOps.minhashPlan($"text", 3, 16))
+    timeIt(HofTwins.minhashPlan($"text", 3, 16))
     val native = timeIt(call_function("minhash_plan", $"text", lit(3), lit(16)))
-    val hof = timeIt(LlmOps.minhashPlan($"text", 3, 16))
+    val hof = timeIt(HofTwins.minhashPlan($"text", 3, 16))
     info(f"native=${native / 1e6}%.1f ms hof=${hof / 1e6}%.1f ms")
     assert(native < hof, s"native not faster: $native vs $hof")
     docs.unpersist()

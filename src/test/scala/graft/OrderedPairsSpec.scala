@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.LlmOps
+import graft.ops.{Assoc, LlmOps}
 
 /** Native ordered_pairs (r17): registration, exact parity (multiset AND
   * emission order) with the nested-HOF pair emission it replaced in
@@ -31,7 +31,7 @@ class OrderedPairsSpec extends SparkTestBase {
         Seq.fill(rng.nextInt(40))(rng.alphanumeric.take(1 + rng.nextInt(6)).mkString)))
       .toDF("id", "ts")
     val mismatches = df.select($"id",
-        LlmOps.orderedPairsBest(df, $"ts").as("one"),
+        Assoc.orderedPairs($"ts").as("one"),
         hofPairs($"ts").as("hof"))
       .filter(not($"one" <=> $"hof")) // null-safe: any order/element diff fails
       .count()
@@ -41,7 +41,7 @@ class OrderedPairsSpec extends SparkTestBase {
   test("duplicate values pair count(x)*count(y) times, exactly like the HOF") {
     val df = Seq((1L, Seq("a", "b", "a", "b", "c"))).toDF("id", "ts")
     val (one, hof) = df.select(
-        LlmOps.orderedPairsBest(df, $"ts").as("one"), hofPairs($"ts").as("hof"))
+        Assoc.orderedPairs($"ts").as("one"), hofPairs($"ts").as("hof"))
       .as[(Seq[(String, String)], Seq[(String, String)])].head()
     assert(one == hof)
     assert(one.count(_ == ("a", "b")) == 4) // 2 a-positions x 2 b-positions
@@ -53,7 +53,7 @@ class OrderedPairsSpec extends SparkTestBase {
       (2L, None: Option[Seq[Option[String]]]))
       .toDF("id", "ts")
     val rows = df.select($"id",
-        LlmOps.orderedPairsBest(df, $"ts").as("one"), hofPairs($"ts").as("hof"))
+        Assoc.orderedPairs($"ts").as("one"), hofPairs($"ts").as("hof"))
       .as[(Long, Option[Seq[(String, String)]], Option[Seq[(String, String)]])]
       .collect().sortBy(_._1)
     assert(rows(0)._2 == rows(0)._3 && rows(0)._2.get == Seq(("a", "c")))
@@ -68,8 +68,8 @@ class OrderedPairsSpec extends SparkTestBase {
           .map(_.toLong)))
       .toDF("id", "ts")
     val mismatches = df.select($"id",
-        graft.ops.Assoc.pairStructsBest(df, $"ts").as("one"),
-        graft.ops.Assoc.pairStructs($"ts").as("hof"))
+        Assoc.orderedPairs($"ts").as("one"),
+        HofTwins.pairStructs($"ts").as("hof"))
       .filter(not($"one" <=> $"hof"))
       .count()
     assert(mismatches == 0)
@@ -78,7 +78,7 @@ class OrderedPairsSpec extends SparkTestBase {
   test("works on non-string orderable elements (long), parity with HOF") {
     val df = Seq((1L, Seq(3L, 1L, 2L))).toDF("id", "ts")
     val (one, hof) = df.select(
-        LlmOps.orderedPairsBest(df, $"ts").as("one"), hofPairs($"ts").as("hof"))
+        Assoc.orderedPairs($"ts").as("one"), hofPairs($"ts").as("hof"))
       .as[(Seq[(Long, Long)], Seq[(Long, Long)])].head()
     assert(one == hof && one == Seq((1L, 3L), (1L, 2L), (2L, 3L)))
   }

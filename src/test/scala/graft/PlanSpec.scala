@@ -583,11 +583,25 @@ class PlanSpec extends SparkTestBase {
     assert(!p.contains("Window"), s"census must not window:\n$p")
   }
 
-  test("blocking_suppliers: per-order aggregates + semi join, top-k heap") {
+  test("blocking_suppliers: one per-order Window pass, top-k heap, capped shuffles") {
     val p = planOf("blocking_suppliers")
-    assert(p.contains("LeftSemi"), s"unique-last filter must be a semi join:\n$p")
+    val finalPlan = p.split("== Initial Plan ==").head
+    // the per-order max / supplier count / unique-at-max facts are window
+    // aggregates over the order key, all fed by ONE order-key shuffle
+    val windows = finalPlan.split("\n").map(_.replaceAll("^[\\s:+-]*", ""))
+      .filter(_.startsWith("Window ["))
+    assert(windows.nonEmpty, s"expected a Window pass:\n$finalPlan")
+    windows.foreach(w => assert(w.split("\\], \\[")(1).startsWith("l_orderkey#"),
+      s"every Window must partition by l_orderkey:\n$finalPlan"))
+    assert("Exchange hashpartitioning\\(l_orderkey#\\d+L, \\d+\\)".r
+      .findAllIn(finalPlan).size == 1, s"one order-key shuffle:\n$finalPlan")
     assert(p.contains("TakeOrderedAndProject"), p)
     assert(!p.contains("CartesianProduct"), p)
+    assert(!p.contains("LeftSemi"), p)
+    // measured at 3: the (order, supplier) aggregate, the Window's
+    // order-key repartition and the supplier aggregate
+    val exchanges = finalPlan.split("\n").count(_.matches(".*[+-] Exchange .*"))
+    assert(exchanges <= 3, s"too many shuffles ($exchanges):\n$finalPlan")
   }
 
   test("supplier_share: global total broadcasts — no per-row shuffle for the threshold") {

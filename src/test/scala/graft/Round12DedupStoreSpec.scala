@@ -46,7 +46,7 @@ class Round12DedupStoreSpec extends SparkTestBase {
         r.getAs[Double]("jaccard"))).toSet
     // inline twin: PPJoin over the SAME md5-48 sh sets
     val sets = docs.select(col("lang").as("__blk"), col("doc_id"),
-      array_sort(LlmOps.minhashPlanBest(docs, col("text"), 3, 16)
+      array_sort(LlmOps.minhashPlan(col("text"), 3, 16)
         .getField("sh")).as("__sh"))
     val inline = LlmOps.jaccardPairsFromSets(sets, "doc_id", 0.5)
       .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),

@@ -222,7 +222,7 @@ class Round15SegmentSpec extends SparkTestBase {
     // exactness: evolved postings == full assignment under gen1's quantizer
     val fit = VectorOps.ivfFit(g1, "embedding", 8, 42L, 4096, 10)
     val want = emb.withColumn("__cell",
-        VectorOps.nearestCell(spark, $"embedding".cast("array<double>"), fit))
+        VectorOps.nearestCell($"embedding".cast("array<double>"), fit))
       .select($"vec_id", $"__cell").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
     val got = a2.select($"vec_id", $"__cell").collect()

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.functions.MinHashAggregator
-import graft.ops.{LlmOps, Relational}
+import graft.ops.Relational
 import graft.streaming.StreamingOps
 
 /** Scale machinery: salted aggregation, typed MinHash Aggregator, custom
@@ -34,7 +34,7 @@ class ScaleOpsSpec extends SparkTestBase {
       (3L, "g2", "completely different content in this group")).toDF("id", "grp", "text")
     val k = 16
     val sigs = docs.select(col("grp"), col("id"),
-        LlmOps.minhashSignature(LlmOps.shingleHashes(col("text"), 3), k).as("sig"))
+        HofTwins.minhashSignature(HofTwins.shingleHashes(col("text"), 3), k).as("sig"))
       .as[(String, Long, Seq[Long])]
     val agg = new MinHashAggregator(k).toColumn
     val merged = sigs.map { case (g, _, s) => (g, s) }

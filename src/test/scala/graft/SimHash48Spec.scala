@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.LlmOps
-
 /** Native simhash48: registration and exact (bitwise) parity with the
   * interpreted HOF fold on whitespace-edge fixtures and a random corpus —
   * the same guarantee that lets the DuckDB oracle replay the sketch.
@@ -35,7 +33,7 @@ class SimHash48Spec extends SparkTestBase {
   test("native == HOF bitwise on whitespace-edge fixtures") {
     val rows = edgeDocs.select($"doc_id",
         call_function("simhash48", $"text", lit(48)).as("native"),
-        LlmOps.simhashHof($"text", 48).as("hof"))
+        HofTwins.simhash($"text", 48).as("hof"))
       .as[(Long, Long, Long)].collect()
     rows.foreach { case (id, nat, hof) =>
       assert(nat == hof, s"doc $id sketch diverged: native=$nat hof=$hof")
@@ -48,7 +46,7 @@ class SimHash48Spec extends SparkTestBase {
         i => concat(lit("w"), pmod(xxhash64($"id", i), lit(50))))).as("text"))
     val diverged = docs.select(
         call_function("simhash48", $"text", lit(48)).as("native"),
-        LlmOps.simhashHof($"text", 48).as("hof"))
+        HofTwins.simhash($"text", 48).as("hof"))
       .filter($"native" =!= $"hof")
       .count()
     assert(diverged == 0)
@@ -72,7 +70,7 @@ class SimHash48Spec extends SparkTestBase {
   test("narrower bit widths agree too (band math depends on them)") {
     val diverged = edgeDocs.select(
         call_function("simhash48", $"text", lit(12)).as("native"),
-        LlmOps.simhashHof($"text", 12).as("hof"))
+        HofTwins.simhash($"text", 12).as("hof"))
       .filter($"native" =!= $"hof")
       .count()
     assert(diverged == 0)

@@ -7,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared local session for all suites (forked test JVM). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session.local("4")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

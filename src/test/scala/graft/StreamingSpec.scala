@@ -291,7 +291,7 @@ class StreamingSpec extends SparkTestBase {
       // from the same batch banding projection
       val batchDf = docs.toDF("doc_id", "text")
       val sig = batchDf.select($"doc_id",
-        graft.ops.LlmOps.minhashPlanBest(batchDf, $"text", 3, 16).getField("sig").as("__sig"))
+        graft.ops.LlmOps.minhashPlan($"text", 3, 16).getField("sig").as("__sig"))
       val bandRows = graft.ops.LlmOps.lshBands(sig, "doc_id", "__sig", 4, 4)
         .select($"doc_id", $"band", $"band_hash").as[(Long, Int, String)].collect()
       val expected = bandRows.groupBy(r => (r._2, r._3)).values

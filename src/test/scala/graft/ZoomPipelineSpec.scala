@@ -114,6 +114,34 @@ class ZoomPipelineSpec extends SparkTestBase {
     assert(p.table("meeting_settings").count() == 3)
   }
 
+  test("numeric-looking meeting_uuid (123e4567…) round-trips; anti-join drains") {
+    import org.apache.spark.sql.types.{DateType, LongType, StringType}
+    import org.scalatest.concurrent.TimeLimits.failAfter
+    import org.scalatest.time.SpanSugar._
+    // digits and one `e`: partition-value inference reads it as a decimal
+    // with a huge exponent
+    val uuid = "123e4567000"
+    val fx: Map[(String, Option[String]), Seq[ApiPage]] = Map(
+      ("meetings", Some("2023-08-01")) -> Seq(ApiPage(Seq(
+        s"""{"uuid":"$uuid","id":201,"topic":"math","start_time":"2023-08-01T10:00:00+00:00","duration":30}"""), None)),
+      ("participants", Some(uuid)) -> Seq(ApiPage(Seq(
+        """{"id":"p1","user_id":"u1","user_name":"Ada","join_time":"2023-08-01T10:01:00Z","leave_time":"2023-08-01T10:30:00Z"}"""), None)))
+    val wh = Files.createTempDirectory("zoomwh").toString
+    val p = new ZoomPipeline(spark, new FixtureClient(fx), wh, sleep = _ => ())
+    failAfter(60.seconds) {
+      assert(p.loadMeetings(LocalDate.parse("2023-08-02")).contains(LocalDate.parse("2023-08-01")))
+      assert(p.loadParticipants() == 1)
+      val parts = p.table("participants")
+      assert(parts.schema("meeting_uuid").dataType == StringType)
+      assert(parts.select("meeting_uuid", "id").as[(String, String)].collect().toSeq ==
+        Seq((uuid, "p1")))
+      assert(p.loadParticipants() == 0) // the anti-join drains to zero
+      assert(p.loadMeetingSettings() == 1)
+      assert(p.table("meeting_settings").schema("meeting_id").dataType == LongType)
+      assert(p.table("meetings").schema("run_date").dataType == DateType)
+    }
+  }
+
   test("--users flow: groups snapshot, per-group members, A4 first-match pick") {
     val (p, _) = freshPipeline()
     // groups snapshot (S3 single-shot, main.py:125-135)
