@@ -2,6 +2,9 @@ package graft.pipeline
 
 import java.time.LocalDate
 
+import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DateType, LongType, StringType, StructField, StructType}
@@ -25,10 +28,11 @@ import graft.sources.PagedApi.PagedApiClient
   *  - "today" is a parameter (`runDate`), never the wall clock
   *    (/root/reference/main.py:214,244), so runs are deterministic
   *
-  * Driver-edge rule (100 TB posture): the only collect()s are the per-key
-  * fetch loops (S4/S9 analogs) whose cardinality is bounded by the
-  * anti-join of *unprocessed* keys, and the key list itself — never data
-  * rows.
+  * Driver-edge rule (100 TB posture): the driver holds the key list,
+  * bounded by the anti-join of *unprocessed* keys, and the keyed loads'
+  * fetched JSON: keys are fetched one by one and written per batch of at
+  * most [[ZoomPipeline.BatchChars]] characters plus one key's records.
+  * Data rows are never collected.
   */
 class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
                    warehouse: String, sleep: Long => Unit = Thread.sleep) {
@@ -68,17 +72,55 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
     partitionedSchemas.get(table).fold(spark.read)(spark.read.schema)
       .parquet(path(table))
 
-  /** Raw JSON pages → typed rows via declared schema; union-of-pages
-    * tolerates per-page drift (SURVEY.md §1.3).
+  /** Raw JSON pages → typed rows via the declared schema, which absorbs
+    * per-page drift (SURVEY.md §1.3); no records → the typed empty frame.
     */
-  private def pagesToDf(pages: Seq[PagedApi.ApiPage], schema: StructType): DataFrame = {
-    val dfs = pages.filter(_.records.nonEmpty).map { p =>
-      spark.createDataset(p.records)
-        .select(from_json(col("value"), schema).as("r"))
-        .select("r.*")
+  private def pagesToDf(pages: Seq[PagedApi.ApiPage], schema: StructType): DataFrame =
+    spark.createDataset(pages.flatMap(_.records))
+      .select(from_json(col("value"), schema).as("r"))
+      .select("r.*")
+
+  private def keyRecords(entity: String, key: String): Seq[String] =
+    PagedApi.fetchAllPages(client, entity, Some(key), sleep = sleep).flatMap(_.records)
+
+  /** A keyed batch → typed rows, the key injected as `keyCol` over any
+    * `keyCol` the JSON carries (F5, main.py:165). */
+  private def keyedRows(batch: DataFrame, schema: StructType, keyCol: String): DataFrame =
+    batch.select(from_json(col("value"), schema).as("r"), col("key"))
+      .select("r.*", "key")
+      .withColumn(keyCol, col("key"))
+      .drop("key")
+
+  /** Keyed load loop (S4 analog) of participants, settings and group
+    * members: fetches each key in order, buffers its records as (`key`,
+    * `value`) rows and hands `write` one frame per batch, a batch ending at
+    * `bound` characters or at the last key (never inside a key, whose
+    * second write would overwrite the first). One batch is one job, so a
+    * key's partition lands whole or not at all. A fetch failure writes the
+    * keys fetched before it, then propagates. A key without records writes
+    * no partition; if no fetched key had any, the empty frame is written
+    * once so the table exists.
+    */
+  private[graft] def loadKeyed[K](keys: Seq[K], bound: Long = ZoomPipeline.BatchChars)
+                                 (fetch: K => Seq[String])(write: DataFrame => Unit): Unit = {
+    val batch = ArrayBuffer.empty[(String, String)]
+    var chars = 0L
+    var fetched = false
+    var wrote = false
+    def flush(): Unit =
+      if (batch.nonEmpty || (fetched && !wrote)) {
+        write(batch.toSeq.toDF("key", "value"))
+        batch.clear()
+        chars = 0
+        wrote = true
+      }
+    keys.foreach { k =>
+      val records = try fetch(k) catch { case NonFatal(e) => flush(); throw e }
+      fetched = true
+      records.foreach { r => batch += ((k.toString, r)); chars += r.length }
+      if (chars >= bound) flush()
     }
-    if (dfs.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else Relational.unionPages(dfs)
+    flush()
   }
 
   /** Users snapshot (§3.1): paged fetch → fixed 13-column reindex → atomic
@@ -119,9 +161,10 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
   }
 
   /** Participants (§3.2 step 2): anti-join finds meetings with no
-    * participant rows yet (main.py:79-85); per-uuid paged fetch; each
-    * meeting's rows land in its meeting_uuid partition, so a retry
-    * overwrites instead of duplicating. Returns meetings processed.
+    * participant rows yet (main.py:79-85); per-uuid paged fetch, one write
+    * per bounded batch of uuids ([[loadKeyed]]); each meeting's rows land
+    * in its meeting_uuid partition, so a retry overwrites instead of
+    * duplicating. Returns meetings processed.
     */
   def loadParticipants(): Int = {
     if (!tableExists("meetings")) return 0
@@ -133,19 +176,18 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
           "uuid", "meeting_uuid")
       else meetings
     // driver edge: bounded list of *unprocessed* keys only (S4 analog)
-    val uuids = newKeys.orderBy("uuid").as[String].collect()
-    uuids.foreach { uuid =>
-      val pages = PagedApi.fetchAllPages(client, "participants", Some(uuid), sleep = sleep)
-      val part = pagesToDf(pages, Schemas.participants)
-        .withColumn("meeting_uuid", lit(uuid)) // F5 literal injection
-      part.write.mode("overwrite").partitionBy("meeting_uuid").parquet(path("participants"))
+    val uuids = newKeys.orderBy("uuid").as[String].collect().toSeq
+    loadKeyed(uuids)(keyRecords("participants", _)) { batch =>
+      keyedRows(batch, Schemas.participants, "meeting_uuid")
+        .write.mode("overwrite").partitionBy("meeting_uuid").parquet(path("participants"))
     }
     uuids.length
   }
 
   /** Meeting settings (§3.2 step 3): anti-join on numeric id
-    * (main.py:310-316), single-shot fetch per id, nested-JSON flatten with
-    * null defaults (main.py:324-334).
+    * (main.py:310-316), single-shot fetch per id, one write per bounded
+    * batch of ids ([[loadKeyed]]), nested-JSON flatten with null defaults
+    * (main.py:324-334). Returns meetings processed.
     */
   def loadMeetingSettings(): Int = {
     if (!tableExists("meetings")) return 0
@@ -156,19 +198,20 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
           meetings, table("meeting_settings").select("meeting_id"),
           "id", "meeting_id")
       else meetings
-    val ids = newKeys.orderBy("id").as[Long].collect()
-    ids.foreach { id =>
-      val page = PagedApi.fetchWithRetry(client, "settings", Some(id.toString), None, sleep = sleep)
-      val settings = spark.createDataset(page.records.toSeq)
+    val ids = newKeys.orderBy("id").as[Long].collect().toSeq
+    loadKeyed(ids)(id =>
+      PagedApi.fetchWithRetry(client, "settings", Some(id.toString), None, sleep = sleep).records
+    ) { batch =>
+      batch
         .select(
-          lit(id).as("meeting_id"),
+          col("key").cast("bigint").as("meeting_id"),
           get_json_object(col("value"), "$.settings.enforce_login").try_cast("boolean").as("enforce_login"),
           get_json_object(col("value"), "$.settings.enforce_login_domains").as("enforce_login_domains"),
           get_json_object(col("value"), "$.settings.authentication_domains").as("authentication_domains"),
           get_json_object(col("value"), "$.settings.authentication_name").as("authentication_name"),
           get_json_object(col("value"), "$.settings.meeting_authentication").try_cast("boolean").as("meeting_authentication"),
           get_json_object(col("value"), "$.settings.waiting_room").try_cast("boolean").as("waiting_room"))
-      settings.write.mode("overwrite").partitionBy("meeting_id").parquet(path("meeting_settings"))
+        .write.mode("overwrite").partitionBy("meeting_id").parquet(path("meeting_settings"))
     }
     ids.length
   }
@@ -204,16 +247,14 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
     groupIds(Some(groupName)).headOption
 
   /** Group members (S4 per-key scan, main.py:149-170): page loop per group
-    * id, parent-key literal injection, one partition per group so a
-    * re-run overwrites instead of duplicating. Returns total member rows.
+    * id, one write per bounded batch of groups ([[loadKeyed]]), parent-key
+    * injection, one partition per group so a re-run overwrites instead of
+    * duplicating. Returns total member rows.
     */
   def loadGroupMembers(): Long = {
-    val ids = groupIds()
-    ids.foreach { gid =>
-      val pages = PagedApi.fetchAllPages(client, "group_members", Some(gid), sleep = sleep)
-      val members = pagesToDf(pages, Schemas.groupMembers)
-        .withColumn("group_id", lit(gid)) // F5 literal injection (main.py:165)
-      members.write.mode("overwrite").partitionBy("group_id").parquet(path("group_members"))
+    loadKeyed(groupIds())(keyRecords("group_members", _)) { batch =>
+      keyedRows(batch, Schemas.groupMembers, "group_id")
+        .write.mode("overwrite").partitionBy("group_id").parquet(path("group_members"))
     }
     if (tableExists("group_members")) table("group_members").count() else 0L
   }
@@ -231,4 +272,10 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
     }
     (ok, failed)
   }
+}
+
+object ZoomPipeline {
+  /** Driver bound of a keyed load: characters of fetched JSON buffered
+    * before a batch is written (at most 64 MiB of strings). */
+  val BatchChars: Long = 32L << 20
 }

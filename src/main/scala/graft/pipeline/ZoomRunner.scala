@@ -20,10 +20,12 @@ import org.apache.spark.sql.{DataFrame, Row}
   */
 object ZoomRunner {
 
-  /** One run's outcome — the mailer's subject/body content as data. */
+  /** One run's outcome — the mailer's subject/body content as data.
+    * `stageMs` is each completed stage's wall time, the reference's
+    * `@elapsed` (timer.py:16-28). */
   case class JobReport(jobName: String, success: Boolean,
                        errorMessage: Option[String], elapsedMs: Long,
-                       stagesRun: Seq[String]) {
+                       stagesRun: Seq[String], stageMs: Seq[(String, Long)] = Nil) {
     /** mailer.py:25-35 formatting. */
     def subjectLine: String =
       s"$jobName - ${if (success) "Success" else "Error"}"
@@ -39,7 +41,8 @@ object ZoomRunner {
   class LogNotifier extends Notifier {
     override def notify(r: JobReport): Unit =
       org.apache.log4j.Logger.getLogger(getClass)
-        .info(s"${r.subjectLine}: ${r.bodyText} (${r.elapsedMs} ms, stages=${r.stagesRun.mkString(",")})")
+        .info(s"${r.subjectLine}: ${r.bodyText} (${r.elapsedMs} ms, stages=${r.stagesRun.mkString(",")}, " +
+          s"stage_ms=${r.stageMs.map { case (name, ms) => s"$name:$ms" }.mkString(",")})")
   }
 
   case class JobFlags(users: Boolean = false, accounts: Boolean = false,
@@ -71,8 +74,12 @@ object ZoomRunner {
           students: () => DataFrame = () => null,
           create: Row => Unit = _ => ()): JobReport = {
     val t0 = System.nanoTime()
-    val stages = Seq.newBuilder[String]
-    def stage(name: String)(body: => Unit): Unit = { body; stages += name }
+    val stages = Seq.newBuilder[(String, Long)]
+    def stage(name: String)(body: => Unit): Unit = {
+      val s0 = System.nanoTime()
+      body
+      stages += name -> (System.nanoTime() - s0) / 1000000
+    }
     val error: Option[String] =
       try {
         if (flags.users) {
@@ -97,8 +104,9 @@ object ZoomRunner {
       } catch {
         case e: Throwable => Some(s"${e.getClass.getName}: ${e.getMessage}")
       }
+    val ran = stages.result()
     val report = JobReport(jobName, error.isEmpty, error,
-      (System.nanoTime() - t0) / 1000000, stages.result())
+      (System.nanoTime() - t0) / 1000000, ran.map(_._1), ran)
     notifier.notify(report)
     report
   }

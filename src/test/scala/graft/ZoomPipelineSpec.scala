@@ -218,6 +218,9 @@ class ZoomPipelineSpec extends SparkTestBase {
     assert(report.success && report.errorMessage.isEmpty)
     assert(report.stagesRun == Seq("load_users", "load_groups", "load_group_members",
       "load_meetings", "load_participants", "load_meeting_settings"))
+    // per-stage elapsed time (timer.py:16-28): one entry per stage run
+    assert(report.stageMs.map(_._1) == report.stagesRun)
+    assert(report.stageMs.forall(_._2 >= 0))
     assert(reports.size == 1 && reports.head.subjectLine == "Zoom Connector - Success")
     assert(p.table("users").count() == 3 && p.table("meetings").count() == 3)
     // --accounts was NOT selected: no account stage ran
@@ -258,5 +261,128 @@ class ZoomPipelineSpec extends SparkTestBase {
       if (row.getAs[String]("email").startsWith("bad")) sys.error("409 exists")
     })
     assert(ok == 2 && failed == 1)
+  }
+
+  /** One day of `n` meetings (ids beyond the int range), each with two
+    * participant pages and one settings record. */
+  private def dayOf(n: Int): Map[(String, Option[String]), Seq[ApiPage]] = {
+    val uuids = (1 to n).map(i => f"m$i%02d")
+    val ids = (1 to n).map(i => 3000000000L + i)
+    def part(p: Int) =
+      s"""{"id":"p$p","user_id":"u$p","user_name":"U$p","meeting_uuid":"stale","join_time":"2023-08-01T10:0$p:00Z"}"""
+    val meetings = uuids.zip(ids).map { case (u, id) =>
+      s"""{"uuid":"$u","id":$id,"topic":"t","start_time":"2023-08-01T10:00:00+00:00","duration":30}"""
+    }
+    Map[(String, Option[String]), Seq[ApiPage]](
+      ("meetings", Some("2023-08-01")) -> Seq(ApiPage(meetings, None))) ++
+      uuids.map(u => ("participants", Option(u)) ->
+        Seq(ApiPage(Seq(part(1), part(2)), Some("1")), ApiPage(Seq(part(3)), None))) ++
+      ids.map(id => ("settings", Option(id.toString)) ->
+        Seq(ApiPage(Seq("""{"settings":{"waiting_room":true}}"""), None)))
+  }
+
+  private def jobsLaunched(body: => Unit): Int = {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { body; ListenerBusDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get
+  }
+
+  test("keyed loads write one job per batch: 3 and 30 keys launch the same jobs") {
+    def load(n: Int): Int = {
+      val wh = Files.createTempDirectory("zoomwh").toString
+      val p = new ZoomPipeline(spark, new FixtureClient(dayOf(n)), wh, sleep = _ => ())
+      assert(p.loadMeetings(LocalDate.parse("2023-08-02")).isDefined)
+      val jobs = jobsLaunched {
+        assert(p.loadParticipants() == n)
+        assert(p.loadMeetingSettings() == n)
+      }
+      val parts = p.table("participants")
+      assert(parts.count() == 3L * n)
+      // the key column, not the JSON's meeting_uuid, names the partition
+      assert(parts.filter($"meeting_uuid" === "m01").count() == 3)
+      assert(p.table("meeting_settings").select("meeting_id").as[Long].collect().sorted.toSeq ==
+        (1 to n).map(3000000000L + _))
+      jobs
+    }
+    assert(load(3) == load(30))
+  }
+
+  test("loadKeyed: batches end at the bound, never inside a key; rows are the same") {
+    val (p, _) = freshPipeline()
+    val records = Map("a" -> Seq("1", "2"), "b" -> Seq.empty, "c" -> Seq("3"), "d" -> Seq("4", "5", "6"))
+    def run(bound: Long): (Int, Seq[(String, String)]) = {
+      val out = Files.createTempDirectory("keyed").toString
+      var writes = 0
+      p.loadKeyed(records.keys.toSeq.sorted, bound)(records) { batch =>
+        writes += 1
+        batch.write.mode("overwrite").partitionBy("key").parquet(out)
+      }
+      (writes, spark.read.parquet(out).select("key", "value").as[(String, String)]
+        .collect().toSeq.sorted)
+    }
+    val (oneBatch, rows) = run(ZoomPipeline.BatchChars)
+    assert(oneBatch == 1 && rows.size == 6)
+    assert(run(1) == (3, rows)) // a, c and d alone; b has no records
+    assert(run(3) == (2, rows)) // a..c = 3 characters, then d
+  }
+
+  test("loadKeyed: a fetch failure writes the keys before it; a failed write is not repeated") {
+    val (p, _) = freshPipeline()
+    var written = Seq.empty[Seq[String]]
+    val e = intercept[PagedApi.TransientApiError] {
+      p.loadKeyed(Seq("a", "b", "c"))(k =>
+        if (k == "b") throw new PagedApi.TransientApiError("b down") else Seq(s"{$k}")
+      )(batch => written :+= batch.select("key").as[String].collect().toSeq)
+    }
+    assert(e.getMessage == "b down" && written == Seq(Seq("a")))
+
+    var writes = 0
+    intercept[IllegalStateException] { // the first key's batch fails inside the loop
+      p.loadKeyed(Seq("a", "b"), bound = 1)(k => Seq(k)) { _ =>
+        writes += 1
+        throw new IllegalStateException("disk")
+      }
+    }
+    assert(writes == 1)
+
+    // every key empty: the empty frame is written once; no keys: nothing
+    var empties = Seq.empty[Long]
+    p.loadKeyed(Seq("a", "b"))(_ => Nil)(batch => empties :+= batch.count())
+    p.loadKeyed(Seq.empty[String])(_ => Nil)(batch => empties :+= batch.count())
+    assert(empties == Seq(0L))
+  }
+
+  test("participants: a key that keeps failing leaves the keys before it; a rerun completes") {
+    import graft.pipeline.ZoomRunner
+    val fx = dayOf(3)
+    val healthy = new FixtureClient(fx)
+    val failing = new PagedApi.PagedApiClient {
+      def fetchPage(e: String, k: Option[String], t: Option[String]) =
+        if (e == "participants" && k.contains("m02")) throw new PagedApi.TransientApiError("m02 down")
+        else healthy.fetchPage(e, k, t)
+    }
+    val wh = Files.createTempDirectory("zoomwh").toString
+    val runDate = LocalDate.parse("2023-08-02")
+    val report = ZoomRunner.run(new ZoomPipeline(spark, failing, wh, sleep = _ => ()),
+      ZoomRunner.JobFlags(meetings = true), runDate, _ => ())
+    assert(!report.success && report.errorMessage.exists(_.contains("m02 down")))
+    assert(report.stagesRun == Seq("load_meetings"))
+
+    val p = new ZoomPipeline(spark, healthy, wh, sleep = _ => ())
+    assert(p.table("participants").select("meeting_uuid").distinct().as[String].collect().toSeq ==
+      Seq("m01"))
+    assert(p.loadParticipants() == 2) // m02 and m03
+    assert(p.loadParticipants() == 0) // the anti-join drains
+    val parts = p.table("participants")
+    assert(parts.count() == 9)
+    assert(parts.select("meeting_uuid", "id").distinct().count() == 9)
   }
 }
