@@ -1,11 +1,14 @@
 package graft.pipeline
 
+import java.io.FileNotFoundException
 import java.time.LocalDate
 
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DateType, LongType, StringType, StructField, StructType}
 
@@ -28,10 +31,14 @@ import graft.sources.PagedApi.PagedApiClient
   *  - "today" is a parameter (`runDate`), never the wall clock
   *    (/root/reference/main.py:214,244), so runs are deterministic
   *
-  * Driver-edge rule (100 TB posture): the driver holds the key list,
-  * bounded by the anti-join of *unprocessed* keys, and the keyed loads'
-  * fetched JSON: keys are fetched one by one and written per batch of at
-  * most [[ZoomPipeline.BatchChars]] characters plus one key's records.
+  * Driver-edge rule (100 TB posture): the driver holds
+  *  - one name per *processed* key: a keyed table's keys are its partition
+  *    values, listed from its root directory (the file-index read this
+  *    replaced held the same names plus a `FileStatus` per leaf file);
+  *  - the key list, bounded by the anti-join of *unprocessed* keys;
+  *  - the keyed loads' fetched JSON: keys are fetched one by one and
+  *    written per batch of at most [[ZoomPipeline.BatchChars]] characters
+  *    plus one key's records.
   * Data rows are never collected.
   */
 class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
@@ -42,12 +49,36 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
 
   private def path(table: String) = s"$warehouse/$table"
 
+  // Hadoop FileSystem, not java.io.File — the warehouse may be hdfs:// or
+  // s3a://, where a local File.exists() is always false and would silently
+  // reset every incremental load to the fallback branch.
+  private def fileSystemPath(table: String): (FileSystem, Path) = {
+    val p = new Path(path(table))
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
   def tableExists(table: String): Boolean = {
-    // Hadoop FileSystem, not java.io.File — the warehouse may be hdfs://
-    // or s3a://, where a local File.exists() is always false and would
-    // silently reset every incremental load to the fallback branch.
-    val p = new org.apache.hadoop.fs.Path(path(table))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    val (fs, p) = fileSystemPath(table)
+    fs.exists(p)
+  }
+
+  /** The values of `table`'s partition column `column`, from one listing of
+    * the table root; no data file is read. Dynamic partition overwrite
+    * builds a job's `column=value` directories under `.spark-staging-*`
+    * and moves them to the root only at commit, so a listed value is a
+    * committed partition; staging, `_temporary` and `_SUCCESS` entries do
+    * not carry the prefix. Spark's null partition
+    * (`__HIVE_DEFAULT_PARTITION__`) is skipped. An absent table has none.
+    */
+  private def partitionValues(table: String, column: String): Seq[String] = {
+    val (fs, root) = fileSystemPath(table)
+    val prefix = s"$column="
+    val entries = try fs.listStatus(root).toSeq catch { case _: FileNotFoundException => Nil }
+    entries.collect {
+      case e if e.isDirectory && e.getPath.getName.startsWith(prefix) =>
+        e.getPath.getName.drop(prefix.length)
+    }.filterNot(_ == ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
+      .map(ExternalCatalogUtils.unescapePathName)
   }
 
   /** Read schemas of the partitioned tables: the declared data columns,
@@ -135,8 +166,12 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
 
   /** Incremental meetings load (§3.2 step 1): high-watermark next date with
     * school-year fallback; skip when caught up (main.py:213-215); write the
-    * day's rows into a run_date partition (idempotent re-run).
-    * Returns the loaded date, or None when caught up.
+    * day's rows into a run_date partition (idempotent re-run). A day the
+    * API returns no meetings for writes nothing and the next day is
+    * fetched, up to the day before `runDate`: an empty day adds no row, so
+    * it could never move the watermark past itself.
+    * Returns the loaded date, or None when caught up or every remaining
+    * day was empty.
     */
   def loadMeetings(runDate: LocalDate): Option[LocalDate] = {
     // One source of truth for max+1day-or-school-year-start: the same
@@ -150,33 +185,37 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
       Temporal.nextLoadDateWithFallback(source, "__ts", to_date(lit(runDate.toString)))
         .select(date_format(col("next_date"), "yyyy-MM-dd")).as[String].head())
 
-    if (!next.isBefore(runDate)) return None // watermark caught up
-
-    val pages = PagedApi.fetchAllPages(client, "meetings", Some(next.toString), sleep = sleep)
-    val meetings = pagesToDf(pages, Schemas.meetings)
-      .dropDuplicates("uuid") // §7.5.3: no double rows from retried pages
-      .withColumn("run_date", lit(next.toString))
-    meetings.write.mode("overwrite").partitionBy("run_date").parquet(path("meetings"))
-    Some(next)
+    var day = next
+    while (day.isBefore(runDate)) {
+      val pages = PagedApi.fetchAllPages(client, "meetings", Some(day.toString), sleep = sleep)
+      if (pages.exists(_.records.nonEmpty)) {
+        pagesToDf(pages, Schemas.meetings)
+          .dropDuplicates("uuid") // §7.5.3: no double rows from retried pages
+          .withColumn("run_date", lit(day.toString))
+          .write.mode("overwrite").partitionBy("run_date").parquet(path("meetings"))
+        return Some(day)
+      }
+      day = day.plusDays(1)
+    }
+    None // watermark caught up, or every remaining day empty
   }
 
   /** Participants (§3.2 step 2): anti-join finds meetings with no
-    * participant rows yet (main.py:79-85); per-uuid paged fetch, one write
-    * per bounded batch of uuids ([[loadKeyed]]); each meeting's rows land
-    * in its meeting_uuid partition, so a retry overwrites instead of
+    * participant rows yet (main.py:79-85), against the `meeting_uuid`
+    * partition values listed from the table root; a meeting without a
+    * `uuid` has nothing to fetch and is skipped. Per-uuid paged fetch, one
+    * write per bounded batch of uuids ([[loadKeyed]]); each meeting's rows
+    * land in its meeting_uuid partition, so a retry overwrites instead of
     * duplicating. Returns meetings processed.
     */
   def loadParticipants(): Int = {
     if (!tableExists("meetings")) return 0
-    val meetings = table("meetings").select("uuid").distinct()
-    val newKeys =
-      if (tableExists("participants"))
-        Relational.antiJoinNewKeys(
-          meetings, table("participants").select("meeting_uuid"),
-          "uuid", "meeting_uuid")
-      else meetings
+    val processed = partitionValues("participants", "meeting_uuid").toDF("meeting_uuid")
     // driver edge: bounded list of *unprocessed* keys only (S4 analog)
-    val uuids = newKeys.orderBy("uuid").as[String].collect().toSeq
+    val uuids = Relational.antiJoinNewKeys(
+        table("meetings").select("uuid").filter(col("uuid").isNotNull), processed,
+        "uuid", "meeting_uuid")
+      .as[String].collect().distinct.sorted.toSeq
     loadKeyed(uuids)(keyRecords("participants", _)) { batch =>
       keyedRows(batch, Schemas.participants, "meeting_uuid")
         .write.mode("overwrite").partitionBy("meeting_uuid").parquet(path("participants"))
@@ -185,20 +224,19 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
   }
 
   /** Meeting settings (§3.2 step 3): anti-join on numeric id
-    * (main.py:310-316), single-shot fetch per id, one write per bounded
-    * batch of ids ([[loadKeyed]]), nested-JSON flatten with null defaults
+    * (main.py:310-316) against the `meeting_id` partition values listed
+    * from the table root; a meeting without an `id` is skipped.
+    * Single-shot fetch per id, one write per bounded batch of ids
+    * ([[loadKeyed]]), nested-JSON flatten with null defaults
     * (main.py:324-334). Returns meetings processed.
     */
   def loadMeetingSettings(): Int = {
     if (!tableExists("meetings")) return 0
-    val meetings = table("meetings").select(col("id")).distinct()
-    val newKeys =
-      if (tableExists("meeting_settings"))
-        Relational.antiJoinNewKeys(
-          meetings, table("meeting_settings").select("meeting_id"),
-          "id", "meeting_id")
-      else meetings
-    val ids = newKeys.orderBy("id").as[Long].collect().toSeq
+    val processed = partitionValues("meeting_settings", "meeting_id").map(_.toLong).toDF("meeting_id")
+    val ids = Relational.antiJoinNewKeys(
+        table("meetings").select("id").filter(col("id").isNotNull), processed,
+        "id", "meeting_id")
+      .as[Long].collect().distinct.sorted.toSeq
     loadKeyed(ids)(id =>
       PagedApi.fetchWithRetry(client, "settings", Some(id.toString), None, sleep = sleep).records
     ) { batch =>
@@ -230,14 +268,15 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
   }
 
   /** Group-id lookup (main.py:137-147): optional name filter, ids sorted
-    * for determinism (the reference inherits arbitrary DB order). Driver
-    * edge: the group list is small by construction.
+    * on the driver for determinism (the reference inherits arbitrary DB
+    * order); a group without an id is skipped. Driver edge: the group list
+    * is small by construction.
     */
   def groupIds(groupName: Option[String] = None): Seq[String] = {
     if (!tableExists("groups")) return Seq.empty
     val g = table("groups")
     groupName.fold(g)(n => g.filter(col("name") === n))
-      .select("id").orderBy("id").as[String].collect().toSeq
+      .select("id").filter(col("id").isNotNull).as[String].collect().sorted.toSeq
   }
 
   /** A4 first-match pick — the reference's `_get_group_ids("Students")[0]`

@@ -265,9 +265,13 @@ class ZoomPipelineSpec extends SparkTestBase {
 
   /** One day of `n` meetings (ids beyond the int range), each with two
     * participant pages and one settings record. */
-  private def dayOf(n: Int): Map[(String, Option[String]), Seq[ApiPage]] = {
-    val uuids = (1 to n).map(i => f"m$i%02d")
-    val ids = (1 to n).map(i => 3000000000L + i)
+  private def dayOf(n: Int): Map[(String, Option[String]), Seq[ApiPage]] =
+    dayWith((1 to n).map(i => f"m$i%02d"))
+
+  /** One day of meetings with these uuids; the i-th (from 1) has id
+    * 3000000000 + i. */
+  private def dayWith(uuids: Seq[String]): Map[(String, Option[String]), Seq[ApiPage]] = {
+    val ids = uuids.indices.map(i => 3000000001L + i)
     def part(p: Int) =
       s"""{"id":"p$p","user_id":"u$p","user_name":"U$p","meeting_uuid":"stale","join_time":"2023-08-01T10:0$p:00Z"}"""
     val meetings = uuids.zip(ids).map { case (u, id) =>
@@ -384,5 +388,125 @@ class ZoomPipelineSpec extends SparkTestBase {
     val parts = p.table("participants")
     assert(parts.count() == 9)
     assert(parts.select("meeting_uuid", "id").distinct().count() == 9)
+  }
+
+  /** Fixture client that records every (entity, key) it is asked for. */
+  private class RecordingClient(fx: Map[(String, Option[String]), Seq[ApiPage]])
+      extends PagedApi.PagedApiClient {
+    private val inner = new FixtureClient(fx)
+    var requests = Vector.empty[(String, Option[String])]
+    def fetchPage(e: String, k: Option[String], t: Option[String]): ApiPage = {
+      requests :+= ((e, k))
+      inner.fetchPage(e, k, t)
+    }
+    def keys(entity: String): Seq[Option[String]] = requests.collect { case (`entity`, k) => k }
+  }
+
+  test("anti-joins list processed keys: 3 and 40 processed meetings launch the same jobs") {
+    // 40 partitions pass Spark's 32-path threshold for a parallel listing job
+    def rerun(n: Int): Int = {
+      val wh = Files.createTempDirectory("zoomwh").toString
+      val p = new ZoomPipeline(spark, new FixtureClient(dayOf(n)), wh, sleep = _ => ())
+      assert(p.loadMeetings(LocalDate.parse("2023-08-02")).isDefined)
+      assert(p.loadParticipants() == n && p.loadMeetingSettings() == n)
+      jobsLaunched {
+        assert(p.loadParticipants() == 0)
+        assert(p.loadMeetingSettings() == 0)
+      }
+    }
+    assert(rerun(3) == rerun(40))
+  }
+
+  test("uncommitted staging and _temporary directories do not mark a meeting processed") {
+    val client = new RecordingClient(dayWith(Seq("m1", "m9")))
+    val wh = Files.createTempDirectory("zoomwh").toString
+    val p = new ZoomPipeline(spark, client, wh, sleep = _ => ())
+    assert(p.loadMeetings(LocalDate.parse("2023-08-02")).isDefined)
+    // what a job that died before its commit leaves behind
+    val staged = java.nio.file.Paths.get(wh, "participants", ".spark-staging-x", "meeting_uuid=m9")
+    Files.createDirectories(staged)
+    Files.write(staged.resolve("part-0.parquet"), Array[Byte](1, 2, 3))
+    Files.createDirectories(java.nio.file.Paths.get(wh, "participants", "_temporary", "0", "meeting_uuid=m9"))
+    Files.createDirectories(java.nio.file.Paths.get(wh, "meeting_settings", "_temporary", "0", "meeting_id=3000000002"))
+
+    assert(p.loadParticipants() == 2)
+    assert(p.loadMeetingSettings() == 2)
+    assert(client.keys("participants").distinct == Seq(Some("m1"), Some("m9")))
+    assert(p.table("participants").select("meeting_uuid").distinct().as[String].collect().sorted.toSeq ==
+      Seq("m1", "m9"))
+    assert(p.loadParticipants() == 0 && p.loadMeetingSettings() == 0)
+  }
+
+  test("a base64 meeting_uuid with '/', '+' and '==' round-trips; the anti-join drains") {
+    val uuid = "aB3/x+Yz9Qk7/Lw=="
+    val wh = Files.createTempDirectory("zoomwh").toString
+    val p = new ZoomPipeline(spark, new FixtureClient(dayWith(Seq(uuid))), wh, sleep = _ => ())
+    assert(p.loadMeetings(LocalDate.parse("2023-08-02")).isDefined)
+    assert(p.loadParticipants() == 1)
+    assert(p.table("participants").select("meeting_uuid").distinct().as[String].collect().toSeq ==
+      Seq(uuid))
+    assert(p.loadParticipants() == 0)
+  }
+
+  test("a meeting without uuid or id is skipped by both keyed stages; no null key is fetched") {
+    val fx = dayOf(1) + (("meetings", Some("2023-08-01")) -> Seq(ApiPage(Seq(
+      """{"uuid":"m01","id":3000000001,"topic":"t","start_time":"2023-08-01T10:00:00+00:00","duration":30}""",
+      """{"topic":"drifted","start_time":"2023-08-01T12:00:00+00:00"}"""), None)))
+    val client = new RecordingClient(fx)
+    val wh = Files.createTempDirectory("zoomwh").toString
+    val p = new ZoomPipeline(spark, client, wh, sleep = _ => ())
+    assert(p.loadMeetings(LocalDate.parse("2023-08-02")).isDefined)
+    assert(p.table("meetings").count() == 2)
+    assert(p.loadMeetingSettings() == 1)
+    assert(p.loadParticipants() == 1)
+    assert(client.keys("settings") == Seq(Some("3000000001")))
+    assert(client.keys("participants").distinct == Seq(Some("m01")))
+    assert(p.table("meeting_settings").select("meeting_id").as[Long].collect().toSeq == Seq(3000000001L))
+    assert(p.loadMeetingSettings() == 0 && p.loadParticipants() == 0)
+  }
+
+  test("a group without an id is skipped by the group lookups and the members load") {
+    val client = new RecordingClient(fixtures + (("groups", None) -> Seq(ApiPage(Seq(
+      """{"id":"g2","name":"Students","total_members":1}""",
+      """{"name":"Students","total_members":5}""",
+      """{"id":"g1","name":"Students","total_members":2}"""), None))))
+    val p = new ZoomPipeline(spark, client, Files.createTempDirectory("zoomwh").toString, sleep = _ => ())
+    assert(p.loadGroups() == 3L)
+    assert(p.groupIds() == Seq("g1", "g2"))
+    assert(p.firstGroupId("Students").contains("g1"))
+    assert(p.loadGroupMembers() == 3L)
+    assert(client.keys("group_members").distinct == Seq(Some("g1"), Some("g2")))
+  }
+
+  test("runner: a day without meetings is stepped over, never fetched twice") {
+    import graft.pipeline.ZoomRunner
+    val fx: Map[(String, Option[String]), Seq[ApiPage]] = Map(
+      ("meetings", Some("2023-08-01")) -> Seq(ApiPage(Seq(
+        """{"uuid":"m1","id":101,"topic":"t","start_time":"2023-08-01T10:00:00+00:00","duration":30}"""), None)),
+      ("meetings", Some("2023-08-03")) -> Seq(ApiPage(Seq(
+        """{"uuid":"m3","id":103,"topic":"t","start_time":"2023-08-03T10:00:00+00:00","duration":30}"""), None)))
+    // fails a second fetch of the same meetings day, so a loop fails the run
+    def guarded() = new RecordingClient(fx) {
+      override def fetchPage(e: String, k: Option[String], t: Option[String]): ApiPage = {
+        if (e == "meetings" && keys("meetings").contains(k)) sys.error(s"meetings $k fetched twice")
+        super.fetchPage(e, k, t)
+      }
+    }
+    val wh = Files.createTempDirectory("zoomwh").toString
+    val runDate = LocalDate.parse("2023-08-05")
+    val first = guarded()
+    val p = new ZoomPipeline(spark, first, wh, sleep = _ => ())
+    val report = ZoomRunner.run(p, ZoomRunner.JobFlags(meetings = true), runDate, _ => ())
+    assert(report.success, report.errorMessage)
+    assert(p.table("meetings").select("uuid").as[String].collect().sorted.toSeq == Seq("m1", "m3"))
+    assert(first.keys("meetings") ==
+      Seq("2023-08-01", "2023-08-02", "2023-08-03", "2023-08-04").map(Option(_)))
+
+    val second = guarded()
+    val again = ZoomRunner.run(new ZoomPipeline(spark, second, wh, sleep = _ => ()),
+      ZoomRunner.JobFlags(meetings = true), runDate, _ => ())
+    assert(again.success, again.errorMessage)
+    assert(second.keys("meetings") == Seq(Some("2023-08-04")))
+    assert(p.table("meetings").count() == 2)
   }
 }
