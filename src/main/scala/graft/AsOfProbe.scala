@@ -4,11 +4,11 @@ package graft
 // item 5 evidence). Builds a clicks × purchases as-of workload from the
 // events table, with the right side widened to a configurable number of
 // extra payload columns, and times the composed union+window op against
-// the native merge exec warm (3 runs each, report runs 2-3). The routing
-// stat asOfAuto uses (schema default-size payload width) is printed per
-// width so the REGRESSIONS row can tie the measured crossover to the
-// router's threshold. Args: [sfDir] [widths...] (defaults sf0.1 and
-// widths 1, 4, 16, 48 extra long columns = 8..384 payload bytes).
+// the native merge exec warm (3 runs each, report runs 2-3). Each width
+// prints the right payload's default-size width and which op was faster
+// over the two warm runs, so a crossover shows as the width where
+// `faster` flips. Args: [sfDir] [widths...] (defaults sf0.1 and widths
+// 1, 4, 16, 48 extra long columns = 8..384 payload bytes).
 import org.apache.spark.sql.functions._
 
 import graft.ops.AsOfJoin
@@ -67,12 +67,12 @@ object AsOfProbe {
       val nt = (1 to 3).map(_ => time(nativeRun()))
       val cpt = (1 to 3).map(_ => time(composedPruned()))
       val npt = (1 to 3).map(_ => time(nativePruned()))
-      val routed = "native" // r12 default: wideRightBytes = 0
+      val faster = if (nt(1) + nt(2) <= ct(1) + ct(2)) "native" else "composed"
       println(f"[asof_probe] dir=$dir extraCols=$w payloadBytes=$payloadWidth " +
         f"composed=${ct(1)}%.2f/${ct(2)}%.2f s native=${nt(1)}%.2f/${nt(2)}%.2f s " +
         f"composedPruned=${cpt(1)}%.2f/${cpt(2)}%.2f s " +
         f"nativePruned=${npt(1)}%.2f/${npt(2)}%.2f s " +
-        s"asOfAuto(default)->$routed")
+        s"faster=$faster")
     }
     spark.stop()
   }

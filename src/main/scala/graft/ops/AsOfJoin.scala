@@ -200,49 +200,6 @@ object AsOfJoin {
         rightTieHash = tie))
   }
 
-  /** Routed backward as-of join: picks [[asOfNative]] whenever the
-    * session registered the planner strategy, the composed [[asOf]]
-    * otherwise — flattened to the native output shape (left columns ++
-    * right columns, right nullable) so callers see one contract.
-    *
-    * Routing history: r10 measured the composed op ahead on narrow right
-    * payloads (the union+window pipeline amortized its single exchange
-    * better than the merge's two), so this router width-gated at 48
-    * default-size bytes. r12 made [[graft.plans.AsOfJoinPruning]] give
-    * the native plan real column pruning and re-measured (AsOfProbe,
-    * two sweeps × 3 runs, sf0.1): the crossover INVERTED — native wins
-    * at every probed width now (16 B payload: 0.37–0.43 s vs 0.59–0.76 s
-    * composed; 40 B: 0.21 s vs 0.28 s; 392 B: 0.31 s vs 0.44 s), and the
-    * pruned-consumer case widens the gap further (0.17–0.29 s native vs
-    * 0.27–0.43 s composed — the composed op's tie hash consumes the full
-    * payload struct, so Catalyst can never prune it). Default is
-    * therefore native; `wideRightBytes` remains as an explicit escape
-    * (payload width strictly below it routes composed) for callers who
-    * re-measure differently on their data.
-    *
-    * A right payload containing a non-orderable column (MapType) always
-    * routes native — the composed op's xxhash64 tiebreak rejects maps at
-    * analysis, the native exec's value-computed tiebreak handles them.
-    */
-  def asOfAuto(left: DataFrame, right: DataFrame,
-               leftKey: String, rightKey: String,
-               leftTs: String, rightTs: String,
-               wideRightBytes: Int = 0): DataFrame = {
-    val payload = right.schema.fields
-      .filterNot(f => f.name == rightKey || f.name == rightTs)
-    val payloadWidth = payload.map(_.dataType.defaultSize).sum
-    val hasNonOrderable = payload.exists(f =>
-      !org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(f.dataType))
-    val nativeAvailable = left.sparkSession.sessionState.planner.strategies
-      .exists(_.isInstanceOf[graft.plans.AsOfJoinStrategy])
-    if (nativeAvailable && (hasNonOrderable || payloadWidth >= wideRightBytes))
-      asOfNative(left, right, leftKey, rightKey, leftTs, rightTs)
-    else {
-      val flat = asOf(left, right, leftKey, rightKey, leftTs, rightTs, "__asof_r")
-      flat.select(left.columns.map(col).toIndexedSeq :+ col("__asof_r.*"): _*)
-    }
-  }
-
   /** Banded range join WITHOUT an equi key: pairs (a, b) whose timestamps
     * differ by less than `bandSeconds`. A raw inequality theta-join has no
     * hashable key — Spark would nested-loop it. Bucketing by

@@ -42,10 +42,6 @@ object Multimodal {
     def open(): Unit = ()
     /** Fixed-width feature vector for one blob. */
     def features(content: Array[Byte], dim: Int): Array[Float]
-    /** Deterministic sample of frame offsets (ms) for a clip. */
-    def frameOffsets(durationMs: Long, everyMs: Long): Seq[Long] =
-      if (durationMs <= 0 || everyMs <= 0) Seq.empty
-      else 0L.until(durationMs).by(everyMs)
     def close(): Unit = ()
   }
 

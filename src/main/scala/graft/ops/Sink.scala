@@ -1519,33 +1519,6 @@ object Sink {
     }
   }
 
-  /** COMMIT NUMBERS of the retained versions, oldest first: the i-th
-    * commit of a table's history is number i (0-based), derived from the
-    * supersession markers' monotonic sequence (a displaced version's
-    * marker seq IS its commit number; the live version is max + 1).
-    * Stable across restarts and GC — numbers never shift as old versions
-    * age out, which is what lets a STREAMING changefeed checkpoint them
-    * as offsets. Legacy (seq-less) markers are excluded: their order is
-    * mtime-granularity ambiguous, and a streaming consumer must never
-    * see a renumbering. Driver-side metadata listing only.
-    */
-  private[graft] def commitNumbers(spark: SparkSession,
-                                   path: String): Seq[(Long, String)] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return Nil
-    val live = currentVersion(fs, root).getOrElse(return Nil)
-    val marked = markerStatuses(fs, root)
-      .map(m => (markerSeq(fs, m.getPath),
-        m.getPath.getName.stripPrefix("_superseded-")))
-      .filter { case (seq, v) => seq >= 0 && v != live &&
-        fs.exists(new Path(root, v)) }
-      .sortBy(_._1)
-    val liveNo = 1L + markerStatuses(fs, root)
-      .map(m => markerSeq(fs, m.getPath)).foldLeft(-1L)(math.max)
-    (marked.toSeq :+ (liveNo, live)).toSeq
-  }
-
   /** History-order key for a non-live version: (marker sequence number,
     * marker mtime). The sequence — written into the marker at commit time
     * — is the primary order: monotonic per table, immune to filesystem

@@ -32,42 +32,6 @@ object PagedApi {
     def fetchPage(entity: String, key: Option[String], token: Option[String]): ApiPage
   }
 
-  /** A client whose API accepts a server-side date parameter — the
-    * reference's `from`/`to` request params (/root/reference/main.py:219-224):
-    * one token chain per ISO day, and days outside the requested window are
-    * never fetched at all. This is what the DSv2 filter pushdown lowers to.
-    */
-  trait DayRangedApiClient extends PagedApiClient {
-    def fetchDayPage(entity: String, key: Option[String], day: String,
-                     token: Option[String]): ApiPage
-  }
-
-  /** In-memory day-ranged fixture: (entity, key, day) → pages. Counts
-    * fetches so specs can assert pushdown really skipped server calls.
-    */
-  final class DayFixtureClient(
-      fixtures: Map[(String, Option[String], String), Seq[ApiPage]])
-      extends DayRangedApiClient {
-    val fetchCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    val daysFetched = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-    def fetchDayPage(entity: String, key: Option[String], day: String,
-                     token: Option[String]): ApiPage = {
-      fetchCount.incrementAndGet()
-      daysFetched.add(day)
-      val pages = fixtures.getOrElse((entity, key, day), Seq(ApiPage(Seq.empty, None)))
-      val idx = token.map(_.toInt).getOrElse(0)
-      val page = pages(idx)
-      val next = if (idx + 1 < pages.size) Some((idx + 1).toString) else None
-      ApiPage(page.records, next)
-    }
-
-    /** Un-dated fetch drains day "" — present so the plain-paged path
-      * still type-checks against fixtures that never use it. */
-    def fetchPage(entity: String, key: Option[String], token: Option[String]): ApiPage =
-      fetchDayPage(entity, key, "", token)
-  }
-
   /** Fetch with bounded retry + backoff. `sleep` is injectable so tests run
     * without wall-clock waits. Mirrors the reference's policy shape
     * (3 attempts, exponential backoff, /root/reference/main.py:21-24) and
@@ -118,9 +82,9 @@ object PagedApi {
     pages.result()
   }
 
-  /** In-memory fixture client for tests and the DSv2 demo source: entity →
-    * (optional key →) pages. Can inject transient failures / rate limits to
-    * exercise the retry path deterministically.
+  /** In-memory fixture client for tests: entity → (optional key →) pages.
+    * Can inject transient failures / rate limits to exercise the retry path
+    * deterministically.
     */
   final class FixtureClient(
       fixtures: Map[(String, Option[String]), Seq[ApiPage]],

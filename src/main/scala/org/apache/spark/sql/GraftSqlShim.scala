@@ -18,16 +18,4 @@ object GraftSqlShim {
     */
   def sessionUUID(spark: SparkSession): String =
     spark.asInstanceOf[classic.SparkSession].sessionUUID
-
-  /** `internalCreateDataFrame(isStreaming = true)` is the seam a v1
-    * streaming Source's getBatch must hand its plan through (the
-    * FileStreamSource recipe) — `private[sql]`, so the accessor lives
-    * here. Used by [[graft.streaming.ChangefeedSource]].
-    */
-  def internalCreateDataFrame(spark: SparkSession,
-                              rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-                              schema: org.apache.spark.sql.types.StructType,
-                              isStreaming: Boolean): DataFrame =
-    spark.asInstanceOf[classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema, isStreaming)
 }

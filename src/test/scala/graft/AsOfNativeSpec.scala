@@ -134,41 +134,14 @@ class AsOfNativeSpec extends SparkTestBase {
     assert(native == 202L)
   }
 
-  test("asOfAuto defaults native (r12 inverted crossover), escape hatch routes composed") {
-    val narrow = rightDf // rid + px payload = 16 default-size bytes
-
-    def execName(df: org.apache.spark.sql.DataFrame): String =
-      df.queryExecution.executedPlan.toString
-
-    // r12 default: native at ANY width (AsOfProbe re-measure after the
-    // pruning rule landed — native won every probed width)
-    val auto = AsOfJoin.asOfAuto(leftDf, narrow, "key", "rkey", "t", "rt")
-    assert(execName(auto).contains("AsOfJoinNative"),
-      "default must route to the native exec")
-    // explicit wideRightBytes still routes narrow payloads composed
-    val composedAuto = AsOfJoin.asOfAuto(leftDf, narrow,
-      "key", "rkey", "t", "rt", wideRightBytes = 1000)
-    assert(!execName(composedAuto).contains("AsOfJoinNative"),
-      "payload below an explicit threshold must route to the composed op")
-
-    // same flattened output columns and the same rows on both routes
-    assert(auto.columns.toSeq == leftDf.columns.toSeq ++ narrow.columns.toSeq)
-    assert(composedAuto.columns.toSeq ==
-      leftDf.columns.toSeq ++ narrow.columns.toSeq)
-    val viaComposed = composedAuto.select($"id", $"rid", $"px")
-      .as[(Long, Option[Long], Option[Double])].collect().toSet
-    val viaNative = auto.select($"id", $"rid", $"px")
-      .as[(Long, Option[Long], Option[Double])].collect().toSet
-    assert(viaComposed == viaNative)
-  }
-
-  test("asOfAuto routes map-typed payloads native regardless of width") {
+  test("asOfNative plans map-typed payloads on the native exec") {
     val l = Seq((1L, 10L, ts("2024-01-01 12:00:00"))).toDF("id", "key", "t")
     val r = Seq((200L, 10L, ts("2024-01-01 11:00:00"), Map("k" -> 1)))
       .toDF("rid", "rkey", "rt", "m")
-    val auto = AsOfJoin.asOfAuto(l, r, "key", "rkey", "t", "rt")
-    assert(auto.queryExecution.executedPlan.toString.contains("AsOfJoinNative"))
-    assert(auto.select($"rid").as[Option[Long]].head().contains(200L))
+    val native = AsOfJoin.asOfNative(l, r, "key", "rkey", "t", "rt")
+    assert(native.queryExecution.executedPlan.toString.contains("AsOfJoinNative"))
+    assert(native.columns.toSeq == l.columns.toSeq ++ r.columns.toSeq)
+    assert(native.select($"rid").as[Option[Long]].head().contains(200L))
   }
 
   test("column pruning reaches the scans below the native exec (r12)") {

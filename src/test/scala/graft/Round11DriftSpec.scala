@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.ops.{LlmOps, Stats, Temporal}
 
 /** Round-11 fourth wave: Poisson-bootstrap CI, token Hellinger distance,
-  * Heaps'-law vocabulary growth, and the Page–Hinkley changepoint pair
-  * (batch + streaming) — hand-computed fixtures for every output field.
+  * Heaps'-law vocabulary growth, and the Page–Hinkley changepoint —
+  * hand-computed fixtures for every output field.
   */
 class Round11DriftSpec extends SparkTestBase {
   import spark.implicits._
@@ -90,7 +90,7 @@ class Round11DriftSpec extends SparkTestBase {
     assert(rows.last.getAs[Long]("cum_types") == 3L)
   }
 
-  // ---- pageHinkley (batch) ----
+  // ---- pageHinkley ----
 
   test("pageHinkley: hand-computed up/down drift at the argmax days") {
     // calib = [10,10,10] (mean 10); test = [10,16,4]
@@ -116,38 +116,5 @@ class Round11DriftSpec extends SparkTestBase {
     // every test day ties at 0 → both argmaxes report the first test day
     assert(r.getAs[String]("ph_up_at") == "2024-01-05")
     assert(r.getAs[String]("ph_down_at") == "2024-01-05")
-  }
-
-  // ---- pageHinkleyStream ----
-
-  test("pageHinkleyStream: cross-batch fold matches the hand walk") {
-    import java.sql.Timestamp
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def ts(s: String) = Timestamp.valueOf(s)
-    val input = MemoryStream[(String, Timestamp, Long)]
-    // reference mean 10 = 30/3, lambda 5
-    val stream = graft.streaming.StreamingOps.pageHinkleyStream(
-      input.toDF().toDF("k", "ts", "v"), "k", "ts", "v",
-      refSum = 30L, refCount = 3L, lambda = 5.0)
-    val q = stream.writeStream.format("memory").queryName("ph")
-      .outputMode("update").start()
-    try {
-      // batch 1: [10, 16] → m̃ = 0, 18; min 0, max 18 → up 6 (alarm), down 0
-      input.addData(("g", ts("2024-01-01 10:00:00"), 10L),
-        ("g", ts("2024-01-01 11:00:00"), 16L))
-      q.processAllAvailable()
-      val b1 = spark.table("ph").as[graft.streaming.StreamingOps.PhUpdate]
-        .collect().last
-      assert(b1.n_test == 2L && b1.ph_up == 6.0 && b1.alarm_up)
-      assert(b1.ph_down == 0.0 && !b1.alarm_down)
-      // batch 2: [4] → m̃ = 0; running max 18 → up 0, down 6 (alarm)
-      input.addData(("g", ts("2024-01-01 12:00:00"), 4L))
-      q.processAllAvailable()
-      val b2 = spark.table("ph").as[graft.streaming.StreamingOps.PhUpdate]
-        .collect().last
-      assert(b2.n_test == 3L && b2.ph_up == 0.0 && !b2.alarm_up)
-      assert(b2.ph_down == 6.0 && b2.alarm_down)
-    } finally q.stop()
   }
 }

@@ -4,9 +4,9 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.{LlmOps, Stats}
 
-/** Round-11 fifth wave: FineWeb battery, Cochran's Q, the per-group
-  * permutation scan with Benjamini–Hochberg FDR, and the streaming
-  * vocabulary-novelty monitor — hand-computed fixtures throughout.
+/** Round-11 fifth wave: FineWeb battery, Cochran's Q, and the per-group
+  * permutation scan with Benjamini–Hochberg FDR — hand-computed fixtures
+  * throughout.
   */
 class Round11FilterSpec extends SparkTestBase {
   import spark.implicits._
@@ -105,34 +105,5 @@ class Round11FilterSpec extends SparkTestBase {
     val b = Stats.permutationScanByGroup(df, $"g", $"v", $"id", nPerms = 96)
       .orderBy("group_key").collect().map(_.getAs[Double]("p_value")).toSeq
     assert(a == b && a.length == 3)
-  }
-
-  // ---- vocabNoveltyStream ----
-
-  test("vocabNoveltyStream: bitmap state counts first-ever slots across batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[(String, String)]
-    val stream = graft.streaming.StreamingOps.vocabNoveltyStream(
-      input.toDF().toDF("k", "text"), "k", "text", buckets = 8192)
-    val q = stream.writeStream.format("memory").queryName("vn")
-      .outputMode("update").start()
-    try {
-      // batch 1: "a b a" → 3 tokens, slots {a, b} both new
-      input.addData(("g", "a b a"))
-      q.processAllAvailable()
-      val b1 = spark.table("vn")
-        .as[graft.streaming.StreamingOps.VnUpdate].collect().last
-      assert(b1.tokens_batch == 3L && b1.new_slots_batch == 2L)
-      assert(b1.n_tokens == 3L && b1.slots_seen == 2L)
-      // batch 2: "b c" → only c's slot is first-ever
-      input.addData(("g", "b c"))
-      q.processAllAvailable()
-      val b2 = spark.table("vn")
-        .as[graft.streaming.StreamingOps.VnUpdate].collect().last
-      assert(b2.tokens_batch == 2L && b2.new_slots_batch == 1L)
-      assert(b2.n_tokens == 5L && b2.slots_seen == 3L)
-      assert(b2.saturation == 3.0 / 8192.0)
-    } finally q.stop()
   }
 }

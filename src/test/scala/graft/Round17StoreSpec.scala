@@ -561,58 +561,6 @@ class Round17StoreSpec extends SparkTestBase {
     assert(feed == Set((3L, "0056", "insert")))
   }
 
-  test("streaming: the changefeed source emits per-commit changes, bootstraps from 'earliest', and resumes from its checkpoint") {
-    val base = Files.createTempDirectory("cdfstream17")
-    val out = base.toString + "/t"
-    val ckpt = base.toString + "/ckpt"
-    Sink.overwriteSegmented((1L to 5L).map(i => (i, s"g$i")).toDF("id", "g"),
-      out, retain = 8, minAgeMs = 600000L)
-    // foreachBatch: the one test sink that supports CHECKPOINT RECOVERY
-    // (the memory sink refuses an existing checkpoint dir); rows land in
-    // a shared buffer the restarted query keeps appending to
-    val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Option[String], String, Long)]()
-    def drained: Set[(Long, Option[String], String, Long)] = {
-      import scala.jdk.CollectionConverters._
-      got.iterator().asScala.toSet
-    }
-    def startQ() = spark.readStream
-      .format("graft-changefeed") // the registered short name
-      .option("path", out).option("fromCommit", "earliest").load()
-      .writeStream.option("checkpointLocation", ckpt)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        b.select("id", "g", "_change_type", "_commit_number")
-          .as[(Long, Option[String], String, Long)].collect().foreach(got.add)
-        ()
-      }.start()
-    val q = startQ()
-    try {
-      q.processAllAvailable()
-      // bootstrap: the oldest retained snapshot's full content as
-      // inserts at its commit number
-      assert(drained ==
-        (1 to 5).map(i => (i.toLong, Some(s"g$i"), "insert", 0L)).toSet)
-      // two commits while the stream runs: one append, one delete patch
-      Sink.appendSegment(Seq((6L, "g6")).toDF("id", "g"), out,
-        retain = 8, minAgeMs = 600000L)
-      Sink.patchSegmented(out, Some(Seq(2L).toDF("id")), None,
-        retain = 8, minAgeMs = 600000L)
-      q.processAllAvailable()
-      assert(drained.filter(_._4 > 0L) ==
-        Set((6L, Some("g6"), "insert", 1L), (2L, None, "delete", 2L)))
-    } finally q.stop()
-    // a commit while the stream is DOWN, then restart from the same
-    // checkpoint: ONLY the unserved commit replays
-    Sink.appendSegment(Seq((7L, "g7")).toDF("id", "g"), out,
-      retain = 8, minAgeMs = 600000L)
-    got.clear()
-    val q2 = startQ()
-    try {
-      q2.processAllAvailable()
-      assert(drained == Set((7L, Some("g7"), "insert", 3L)),
-        s"restart must serve only the unserved commit, got $drained")
-    } finally q2.stop()
-  }
-
   // ------------------------------------- validation, cleanup, lock details
 
   test("sink: the _schema sidecar validates delete-key types — partition columns included (the footer path could not)") {

@@ -1,16 +1,12 @@
 package graft
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.functions.MinHashAggregator
 import graft.ops.Relational
-import graft.streaming.StreamingOps
 
-/** Scale machinery: salted aggregation, typed MinHash Aggregator, custom
-  * stateful sessionization, bucketed co-located joins.
+/** Scale machinery: salted aggregation, typed MinHash Aggregator,
+  * bucketed co-located joins.
   */
 class ScaleOpsSpec extends SparkTestBase {
   import spark.implicits._
@@ -53,61 +49,6 @@ class ScaleOpsSpec extends SparkTestBase {
     // identical groups estimate jaccard 1 with themselves
     assert(MinHashAggregator.estimateJaccard(merged("g1"), merged("g1")) == 1.0)
     assert(MinHashAggregator.estimateJaccard(merged("g1"), merged("g2")) < 0.5)
-  }
-
-  test("stateful sessionizer (flatMapGroupsWithState) closes sessions on gap and timeout") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StreamingOps.SessionEvent]
-    def ev(u: Long, s: String) = StreamingOps.SessionEvent(u, Timestamp.valueOf(s))
-    input.addData(
-      ev(1, "2024-01-01 00:00:00"),
-      ev(1, "2024-01-01 00:10:00"),       // same session (gap 30m)
-      ev(1, "2024-01-01 02:00:00"),       // closes session 1, opens session 2
-      ev(2, "2024-01-01 00:00:00"),
-      ev(2, "2024-01-01 09:00:00"))       // closes user-2 session, opens another
-    val sessions = StreamingOps.sessionizeStateful(
-      input.toDS().withWatermark("ts", "1 hour").as[StreamingOps.SessionEvent],
-      gapMs = 30 * 60 * 1000)
-    val q = sessions.writeStream.format("memory").queryName("stateful_sessions")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val got = spark.table("stateful_sessions")
-      .select($"userId", $"nEvents").as[(Long, Long)].collect().toSeq
-      .groupBy(identity).view.mapValues(_.size).toMap
-    // user1 session1 (2 events) closed by gap; user1 session2 (1 event)
-    // closed by EVENT-TIME TIMEOUT (watermark = 09:00 - 1h passed 02:00+gap);
-    // user2's second session (09:00) is still open — ahead of the watermark —
-    // and must NOT be emitted
-    assert(got == Map((1L, 2L) -> 1, (1L, 1L) -> 1, (2L, 1L) -> 1))
-  }
-
-  test("stateful sessionizer handles out-of-order events without regressing bounds") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StreamingOps.SessionEvent]
-    def ev(u: Long, s: String) = StreamingOps.SessionEvent(u, Timestamp.valueOf(s))
-    val sessions = StreamingOps.sessionizeStateful(
-      input.toDS().withWatermark("ts", "1 hour").as[StreamingOps.SessionEvent],
-      gapMs = 30 * 60 * 1000)
-    val q = sessions.writeStream.format("memory").queryName("ooo_sessions")
-      .outputMode("append").start()
-    try {
-      input.addData(ev(1, "2024-01-01 10:00:00"))
-      q.processAllAvailable()
-      // out-of-order but within gap and above watermark: extends backward
-      input.addData(ev(1, "2024-01-01 09:50:00"))
-      q.processAllAvailable()
-      // advance the watermark far past user 1 so its session times out
-      input.addData(ev(2, "2024-01-01 20:00:00"))
-      q.processAllAvailable()
-      val got = spark.table("ooo_sessions")
-        .select($"userId", $"nEvents", $"startMs", $"endMs")
-        .as[(Long, Long, Long, Long)].collect().filter(_._1 == 1L)
-      assert(got.length == 1)
-      val (_, n, start, end) = got.head
-      assert(n == 2)
-      assert(start == Timestamp.valueOf("2024-01-01 09:50:00").getTime)
-      assert(end == Timestamp.valueOf("2024-01-01 10:00:00").getTime) // never regressed
-    } finally q.stop()
   }
 
   test("HLL approx distinct lands within the sketch error bound of exact") {

@@ -232,4 +232,19 @@ class SinkSpec extends SparkTestBase {
     assert(failure.isEmpty, failure.getOrElse(""))
     assert(Sink.readSnapshot(spark, out).count() == 8)
   }
+
+  test("recommit: a DataFrame read before it keeps its pinned version; listVersions' head moves") {
+    val out = Files.createTempDirectory("pin").toString + "/t"
+    Sink.overwriteSnapshot(Seq("gen1").toDF("doc"), out, retain = 2, minAgeMs = 0L)
+    val pin = Sink.listVersions(spark, out).head
+    // the file listing is fixed when the DataFrame is created
+    val pinned = Sink.readSnapshot(spark, out)
+    assert(Sink.listVersions(spark, out).head == pin, "no recommit yet")
+    Sink.overwriteSnapshot(Seq("gen2").toDF("doc"), out, retain = 2, minAgeMs = 0L)
+    val live = Sink.listVersions(spark, out)
+    assert(live.head != pin && live.contains(pin),
+      "the head moves to the new commit; retain=2 keeps the pinned version")
+    assert(pinned.as[String].collect().toSeq == Seq("gen1"))
+    assert(Sink.readSnapshot(spark, out).as[String].collect().toSeq == Seq("gen2"))
+  }
 }

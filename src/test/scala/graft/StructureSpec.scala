@@ -6,8 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-tree guards for the engine's structure: one session factory and
-  * one code path per native operator.
+/** Source-tree guards for the engine's structure: one session factory,
+  * one code path per native operator, and batch only.
   */
 class StructureSpec extends AnyFunSuite {
 
@@ -35,5 +35,15 @@ class StructureSpec extends AnyFunSuite {
     assert(hits.nonEmpty, "the factory itself must be found")
     val outside = hits.filterNot(_.startsWith("src/main/scala/graft/Session.scala:"))
     assert(outside.isEmpty, outside.mkString("\n"))
+  }
+
+  test("src/main is batch only: no Structured Streaming API, no DataSourceRegister service") {
+    val needles = Seq("readStream", "writeStream", "GroupState",
+      "org.apache.spark.sql.streaming", "connector.read.streaming")
+    val hits = needles.flatMap(linesContaining("src/main", _))
+    assert(hits.isEmpty, hits.mkString("\n"))
+    val services = Paths.get("src/main/resources/META-INF/services")
+    val register = services.resolve("org.apache.spark.sql.sources.DataSourceRegister")
+    assert(!Files.exists(register), s"$register registers a data source")
   }
 }

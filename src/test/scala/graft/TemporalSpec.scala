@@ -255,4 +255,42 @@ class TemporalSpec extends SparkTestBase {
     assert(graft.ops.Temporal
       .topEventPaths(df, "user_id", "ts", "event_id", "event_type").isEmpty)
   }
+
+  test("transitionMatrix: a same-second pair orders by the event-id tie-break") {
+    def ev(u: Long, t: String, ty: String, id: Long) = (u, Timestamp.valueOf(t), ty, id)
+    val df = Seq(
+      ev(1L, "2024-01-01 10:00:00", "A", 1L), ev(1L, "2024-01-01 10:01:00", "B", 2L),
+      ev(1L, "2024-01-01 10:02:00", "A", 3L),
+      ev(2L, "2024-01-01 11:00:00", "C", 4L), ev(2L, "2024-01-01 11:01:00", "A", 5L),
+      // same second: event_id says Z then A, so the pair is (Z, A) — a
+      // (ts, event_type) order would give (A, Z)
+      ev(3L, "2024-01-01 12:00:00", "Z", 6L), ev(3L, "2024-01-01 12:00:00", "A", 7L))
+      .toDF("user_id", "ts", "event_type", "event_id")
+    val got = Temporal.transitionMatrix(df, "user_id", "ts", "event_id", "event_type")
+      .select("from_type", "to_type", "n_transitions")
+      .as[(String, String, Long)].collect().toSet
+    assert(got == Set(("A", "B", 1L), ("B", "A", 1L), ("C", "A", 1L),
+      ("Z", "A", 1L)))
+  }
+
+  test("lastTouchAttribution: a same-second touch ahead in event-id order attributes at zero lag") {
+    def ev(u: Long, ty: String, t: String, id: Long) = (u, ty, Timestamp.valueOf(t), id)
+    val df = Seq(
+      ev(1L, "view", "2024-01-01 00:00:00", 1L),
+      ev(1L, "click", "2024-01-01 01:00:00", 2L),
+      ev(1L, "purchase", "2024-01-01 01:30:00", 3L), // ← click, 1800 s
+      ev(1L, "purchase", "2024-01-03 12:00:00", 4L), // stale → null
+      ev(2L, "purchase", "2024-01-01 00:30:00", 5L), // no touch → null
+      // same second: the (ts, event_id) order puts the view first, so the
+      // purchase is attributed to it ("purchase" < "view", so a
+      // (ts, event_type) order would flip it)
+      ev(3L, "view", "2024-01-01 02:00:00", 6L),
+      ev(3L, "purchase", "2024-01-01 02:00:00", 7L))
+      .toDF("user_id", "event_type", "ts", "event_id")
+    val got = Temporal.lastTouchAttribution(df, "user_id", "event_type", "ts",
+        "event_id", conversionKind = "purchase", windowSeconds = 86400)
+      .as[(Long, Long, Option[String], Option[Long])].collect().toSet
+    assert(got == Set((1L, 3L, Some("click"), Some(1800L)), (1L, 4L, None, None),
+      (2L, 5L, None, None), (3L, 7L, Some("view"), Some(0L))))
+  }
 }
