@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DateType, LongType, StringType, StructField, StructType}
 
-import graft.ops.{Ingest, Relational, Temporal}
+import graft.ops.Ingest
 import graft.schemas.Schemas
 import graft.sources.PagedApi
 import graft.sources.PagedApi.PagedApiClient
@@ -35,7 +35,10 @@ import graft.sources.PagedApi.PagedApiClient
   *  - one name per *processed* key: a keyed table's keys are its partition
   *    values, listed from its root directory (the file-index read this
   *    replaced held the same names plus a `FileStatus` per leaf file);
-  *  - the key list, bounded by the anti-join of *unprocessed* keys;
+  *  - a keyed stage's meetings key column (`uuid` or `id`), read in one
+  *    job and diffed against the processed names on the driver: the same
+  *    order of names as the processed listing it already holds, one per
+  *    loaded meeting (ROADMAP G);
   *  - the keyed loads' fetched JSON: keys are fetched one by one and
   *    written per batch of at most [[ZoomPipeline.BatchChars]] characters
   *    plus one key's records.
@@ -164,32 +167,36 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
     table("users").count()
   }
 
-  /** Incremental meetings load (§3.2 step 1): high-watermark next date with
-    * school-year fallback; skip when caught up (main.py:213-215); write the
-    * day's rows into a run_date partition (idempotent re-run). A day the
-    * API returns no meetings for writes nothing and the next day is
-    * fetched, up to the day before `runDate`: an empty day adds no row, so
-    * it could never move the watermark past itself.
+  /** Incremental meetings load (§3.2 step 1): the next day after the
+    * newest committed `run_date` partition, or the school-year start of
+    * `runDate` when there is none ([[ZoomPipeline.schoolYearStart]]); skip
+    * when caught up (main.py:213-215); write the day's rows into a
+    * run_date partition (idempotent re-run). No Spark job runs before the
+    * first fetch: the watermark is one listing of the table root.
+    *
+    * Departs from main.py's `max(start_time)+1` rule (main.py:251-267):
+    * the watermark is the day a meeting was *listed* on, not the day of
+    * its `start_time`. A day whose meetings carry no parseable
+    * `start_time` still moves it (the old rule re-fetched that day
+    * forever), and a meeting listed on one day that starts on the next in
+    * UTC no longer makes the next run skip that next day.
+    *
+    * A day the API returns no meetings for writes nothing and the next day
+    * is fetched, up to the day before `runDate`: an empty day adds no
+    * partition, so it could never move the watermark past itself.
     * Returns the loaded date, or None when caught up or every remaining
     * day was empty.
     */
   def loadMeetings(runDate: LocalDate): Option[LocalDate] = {
-    // One source of truth for max+1day-or-school-year-start: the same
-    // Temporal op the declared queries use — absent table behaves like an
-    // empty one (fallback branch).
-    val source =
-      if (tableExists("meetings"))
-        table("meetings").select(Temporal.parseIsoOffset(col("start_time")).as("__ts"))
-      else spark.emptyDataset[java.sql.Timestamp].toDF("__ts")
-    val next = LocalDate.parse(
-      Temporal.nextLoadDateWithFallback(source, "__ts", to_date(lit(runDate.toString)))
-        .select(date_format(col("next_date"), "yyyy-MM-dd")).as[String].head())
-
-    var day = next
+    var day = partitionValues("meetings", "run_date").map(LocalDate.parse)
+      .maxByOption(_.toEpochDay).fold(ZoomPipeline.schoolYearStart(runDate))(_.plusDays(1))
     while (day.isBefore(runDate)) {
       val pages = PagedApi.fetchAllPages(client, "meetings", Some(day.toString), sleep = sleep)
       if (pages.exists(_.records.nonEmpty)) {
+        // the day's JSON is a local relation: one partition dedups it
+        // without an Exchange, so the write is one job
         pagesToDf(pages, Schemas.meetings)
+          .coalesce(1)
           .dropDuplicates("uuid") // §7.5.3: no double rows from retried pages
           .withColumn("run_date", lit(day.toString))
           .write.mode("overwrite").partitionBy("run_date").parquet(path("meetings"))
@@ -200,22 +207,23 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
     None // watermark caught up, or every remaining day empty
   }
 
-  /** Participants (§3.2 step 2): anti-join finds meetings with no
-    * participant rows yet (main.py:79-85), against the `meeting_uuid`
-    * partition values listed from the table root; a meeting without a
-    * `uuid` has nothing to fetch and is skipped. Per-uuid paged fetch, one
-    * write per bounded batch of uuids ([[loadKeyed]]); each meeting's rows
-    * land in its meeting_uuid partition, so a retry overwrites instead of
-    * duplicating. Returns meetings processed.
+  /** Participants (§3.2 step 2): the meetings with no participant rows
+    * yet (main.py:79-85) — the non-null `uuid`s of `meetings`, collected in
+    * one job, less the `meeting_uuid` partition values listed from the
+    * table root. Per-uuid paged fetch, one write per bounded batch of uuids
+    * ([[loadKeyed]]); each meeting's rows land in its meeting_uuid
+    * partition, so a retry overwrites instead of duplicating.
+    *
+    * A meeting the API gives no participants writes no partition, so it
+    * stays unprocessed and is fetched again on every later run: the
+    * reference's anti-join semantics, kept on purpose (ZoomPipelineSpec's
+    * flagship flow re-fetches its `m3`). Returns meetings processed.
     */
   def loadParticipants(): Int = {
     if (!tableExists("meetings")) return 0
-    val processed = partitionValues("participants", "meeting_uuid").toDF("meeting_uuid")
-    // driver edge: bounded list of *unprocessed* keys only (S4 analog)
-    val uuids = Relational.antiJoinNewKeys(
-        table("meetings").select("uuid").filter(col("uuid").isNotNull), processed,
-        "uuid", "meeting_uuid")
-      .as[String].collect().distinct.sorted.toSeq
+    val processed = partitionValues("participants", "meeting_uuid").toSet
+    val uuids = table("meetings").select("uuid").filter(col("uuid").isNotNull)
+      .as[String].collect().filterNot(processed).distinct.sorted.toSeq
     loadKeyed(uuids)(keyRecords("participants", _)) { batch =>
       keyedRows(batch, Schemas.participants, "meeting_uuid")
         .write.mode("overwrite").partitionBy("meeting_uuid").parquet(path("participants"))
@@ -223,20 +231,18 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
     uuids.length
   }
 
-  /** Meeting settings (§3.2 step 3): anti-join on numeric id
-    * (main.py:310-316) against the `meeting_id` partition values listed
-    * from the table root; a meeting without an `id` is skipped.
-    * Single-shot fetch per id, one write per bounded batch of ids
+  /** Meeting settings (§3.2 step 3): the meetings without settings
+    * (main.py:310-316) — the non-null `id`s of `meetings`, collected in one
+    * job, less the `meeting_id` partition values listed from the table
+    * root. Single-shot fetch per id, one write per bounded batch of ids
     * ([[loadKeyed]]), nested-JSON flatten with null defaults
     * (main.py:324-334). Returns meetings processed.
     */
   def loadMeetingSettings(): Int = {
     if (!tableExists("meetings")) return 0
-    val processed = partitionValues("meeting_settings", "meeting_id").map(_.toLong).toDF("meeting_id")
-    val ids = Relational.antiJoinNewKeys(
-        table("meetings").select("id").filter(col("id").isNotNull), processed,
-        "id", "meeting_id")
-      .as[Long].collect().distinct.sorted.toSeq
+    val processed = partitionValues("meeting_settings", "meeting_id").map(_.toLong).toSet
+    val ids = table("meetings").select("id").filter(col("id").isNotNull)
+      .as[Long].collect().filterNot(processed).distinct.sorted.toSeq
     loadKeyed(ids)(id =>
       PagedApi.fetchWithRetry(client, "settings", Some(id.toString), None, sleep = sleep).records
     ) { batch =>
@@ -317,4 +323,10 @@ object ZoomPipeline {
   /** Driver bound of a keyed load: characters of fetched JSON buffered
     * before a batch is written (at most 64 MiB of strings). */
   val BatchChars: Long = 32L << 20
+
+  /** [[graft.ops.Temporal.schoolYearStart]] on the driver: Aug 1 of the
+    * year of `d` if its month is after June, else of the year before
+    * (main.py:242-249). */
+  private[graft] def schoolYearStart(d: LocalDate): LocalDate =
+    LocalDate.of(if (d.getMonthValue > 6) d.getYear else d.getYear - 1, 8, 1)
 }

@@ -478,6 +478,15 @@ class ZoomPipelineSpec extends SparkTestBase {
     assert(client.keys("group_members").distinct == Seq(Some("g1"), Some("g2")))
   }
 
+  /** A recording client that fails a second fetch of the same meetings
+    * day, so a run that loops on a day fails. */
+  private def guarded(fx: Map[(String, Option[String]), Seq[ApiPage]]) = new RecordingClient(fx) {
+    override def fetchPage(e: String, k: Option[String], t: Option[String]): ApiPage = {
+      if (e == "meetings" && keys("meetings").contains(k)) sys.error(s"meetings $k fetched twice")
+      super.fetchPage(e, k, t)
+    }
+  }
+
   test("runner: a day without meetings is stepped over, never fetched twice") {
     import graft.pipeline.ZoomRunner
     val fx: Map[(String, Option[String]), Seq[ApiPage]] = Map(
@@ -485,16 +494,9 @@ class ZoomPipelineSpec extends SparkTestBase {
         """{"uuid":"m1","id":101,"topic":"t","start_time":"2023-08-01T10:00:00+00:00","duration":30}"""), None)),
       ("meetings", Some("2023-08-03")) -> Seq(ApiPage(Seq(
         """{"uuid":"m3","id":103,"topic":"t","start_time":"2023-08-03T10:00:00+00:00","duration":30}"""), None)))
-    // fails a second fetch of the same meetings day, so a loop fails the run
-    def guarded() = new RecordingClient(fx) {
-      override def fetchPage(e: String, k: Option[String], t: Option[String]): ApiPage = {
-        if (e == "meetings" && keys("meetings").contains(k)) sys.error(s"meetings $k fetched twice")
-        super.fetchPage(e, k, t)
-      }
-    }
     val wh = Files.createTempDirectory("zoomwh").toString
     val runDate = LocalDate.parse("2023-08-05")
-    val first = guarded()
+    val first = guarded(fx)
     val p = new ZoomPipeline(spark, first, wh, sleep = _ => ())
     val report = ZoomRunner.run(p, ZoomRunner.JobFlags(meetings = true), runDate, _ => ())
     assert(report.success, report.errorMessage)
@@ -502,11 +504,138 @@ class ZoomPipelineSpec extends SparkTestBase {
     assert(first.keys("meetings") ==
       Seq("2023-08-01", "2023-08-02", "2023-08-03", "2023-08-04").map(Option(_)))
 
-    val second = guarded()
+    val second = guarded(fx)
     val again = ZoomRunner.run(new ZoomPipeline(spark, second, wh, sleep = _ => ()),
       ZoomRunner.JobFlags(meetings = true), runDate, _ => ())
     assert(again.success, again.errorMessage)
     assert(second.keys("meetings") == Seq(Some("2023-08-04")))
     assert(p.table("meetings").count() == 2)
+  }
+
+  test("runner: a day whose only meeting has no start_time is fetched once") {
+    import graft.pipeline.ZoomRunner
+    val client = guarded(Map(("meetings", Some("2023-08-01")) -> Seq(ApiPage(Seq(
+      """{"uuid":"m1","id":101,"topic":"t","duration":30}"""), None))))
+    val p = new ZoomPipeline(spark, client, Files.createTempDirectory("zoomwh").toString, sleep = _ => ())
+    val report = ZoomRunner.run(p, ZoomRunner.JobFlags(meetings = true), LocalDate.parse("2023-08-03"), _ => ())
+    assert(report.success, report.errorMessage)
+    assert(client.keys("meetings") == Seq(Some("2023-08-01"), Some("2023-08-02")))
+    assert(p.table("meetings").select("uuid").as[String].collect().toSeq == Seq("m1"))
+  }
+
+  test("runner: a meeting listed on 08-01 that starts on 08-02 in UTC does not skip 08-02") {
+    import graft.pipeline.ZoomRunner
+    val fx: Map[(String, Option[String]), Seq[ApiPage]] = Map(
+      ("meetings", Some("2023-08-01")) -> Seq(ApiPage(Seq(
+        """{"uuid":"m1","id":101,"topic":"t","start_time":"2023-08-01T20:30:00-05:00","duration":30}"""), None)),
+      ("meetings", Some("2023-08-02")) -> Seq(ApiPage(Seq(
+        """{"uuid":"m2","id":102,"topic":"t","start_time":"2023-08-02T10:00:00-05:00","duration":30}"""), None)))
+    val wh = Files.createTempDirectory("zoomwh").toString
+    def run(runDate: String) = {
+      val client = guarded(fx)
+      val report = ZoomRunner.run(new ZoomPipeline(spark, client, wh, sleep = _ => ()),
+        ZoomRunner.JobFlags(meetings = true), LocalDate.parse(runDate), _ => ())
+      assert(report.success, report.errorMessage)
+      client.keys("meetings")
+    }
+    assert(run("2023-08-02") == Seq(Some("2023-08-01")))
+    assert(run("2023-08-03") == Seq(Some("2023-08-02")))
+    val p = new ZoomPipeline(spark, new FixtureClient(fx), wh, sleep = _ => ())
+    assert(p.table("meetings").select("uuid").as[String].collect().sorted.toSeq == Seq("m1", "m2"))
+  }
+
+  /** Raised by [[stopAtMeetings]] at its first meetings fetch. */
+  private class FirstFetch extends RuntimeException
+
+  /** A client that throws [[FirstFetch]] when the meetings are first
+    * fetched, so a load counts only the work before that fetch. */
+  private def stopAtMeetings(fx: Map[(String, Option[String]), Seq[ApiPage]]) = new PagedApi.PagedApiClient {
+    private val inner = new FixtureClient(fx)
+    def fetchPage(e: String, k: Option[String], t: Option[String]): ApiPage =
+      if (e == "meetings") throw new FirstFetch else inner.fetchPage(e, k, t)
+  }
+
+  test("loadMeetings starts no Spark job before its first fetch, nor when caught up") {
+    val fx = dayOf(3)
+    val wh = Files.createTempDirectory("zoomwh").toString
+    val p = new ZoomPipeline(spark, new FixtureClient(fx), wh, sleep = _ => ())
+    val runDate = LocalDate.parse("2023-08-02")
+    val stopped = new ZoomPipeline(spark, stopAtMeetings(fx), wh, sleep = _ => ())
+    // empty warehouse: the school-year fallback
+    assert(jobsLaunched { intercept[FirstFetch](stopped.loadMeetings(runDate)) } == 0)
+    assert(p.loadMeetings(runDate).contains(LocalDate.parse("2023-08-01")))
+    // a loaded day: the watermark is its run_date partition
+    assert(jobsLaunched { intercept[FirstFetch](stopped.loadMeetings(runDate.plusDays(3))) } == 0)
+    assert(jobsLaunched { assert(p.loadMeetings(runDate).isEmpty) } == 0)
+  }
+
+  /** `days` days from 2023-08-01 with one meeting each (`d01`, `d02`, …),
+    * each with one participant and one settings record. */
+  private def daysOf(days: Int): Map[(String, Option[String]), Seq[ApiPage]] =
+    (1 to days).flatMap { d =>
+      val (day, uuid, id) = (LocalDate.parse("2023-08-01").plusDays(d - 1L).toString, f"d$d%02d", 4000000000L + d)
+      Seq[((String, Option[String]), Seq[ApiPage])](
+        ("meetings", Some(day)) -> Seq(ApiPage(Seq(
+          s"""{"uuid":"$uuid","id":$id,"topic":"t","start_time":"${day}T10:00:00+00:00","duration":30}"""), None)),
+        ("participants", Some(uuid)) -> Seq(ApiPage(Seq(
+          s"""{"id":"p1","user_id":"u1","user_name":"U1","join_time":"${day}T10:01:00Z"}"""), None)),
+        ("settings", Some(id.toString)) -> Seq(ApiPage(Seq("""{"settings":{"waiting_room":true}}"""), None)))
+    }.toMap
+
+  test("a daily run on a 4-day and a 30-day warehouse launches the same jobs") {
+    import graft.pipeline.ZoomRunner
+    def daily(days: Int): Int = {
+      val first = LocalDate.parse("2023-08-01")
+      val p = new ZoomPipeline(spark, new FixtureClient(daysOf(days + 1)),
+        Files.createTempDirectory("zoomwh").toString, sleep = _ => ())
+      def run(runDate: LocalDate) = {
+        val report = ZoomRunner.run(p, ZoomRunner.JobFlags(meetings = true), runDate, _ => ())
+        assert(report.success, report.errorMessage)
+      }
+      run(first.plusDays(days.toLong))
+      val jobs = jobsLaunched(run(first.plusDays(days + 1L)))
+      assert(p.table("meetings").count() == days + 1)
+      assert(p.table("participants").count() == days + 1)
+      assert(p.table("meeting_settings").count() == days + 1)
+      jobs
+    }
+    assert(daily(4) == daily(30))
+  }
+
+  test("the day's meetings are deduped and written in one job, with no Exchange") {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val retried = """{"uuid":"m02","id":3000000002,"topic":"t","start_time":"2023-08-01T10:00:00+00:00","duration":30}"""
+    val fx = dayOf(3) + (("meetings", Some("2023-08-01")) -> Seq(
+      ApiPage(dayOf(3)(("meetings", Some("2023-08-01"))).head.records :+ retried, Some("1")),
+      ApiPage(Seq(retried), None)))
+    val p = new ZoomPipeline(spark, new FixtureClient(fx), Files.createTempDirectory("zoomwh").toString,
+      sleep = _ => ())
+    var plans = Vector.empty[String]
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans :+= qe.executedPlan.treeString
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    val jobs = try jobsLaunched {
+      assert(p.loadMeetings(LocalDate.parse("2023-08-02")).contains(LocalDate.parse("2023-08-01")))
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    assert(plans.size == 1 && plans.head.contains("InsertIntoHadoopFsRelationCommand"))
+    assert(!plans.head.contains("Exchange"), plans.head)
+    assert(jobs == 1)
+    assert(p.table("meetings").select("uuid").as[String].collect().sorted.toSeq == Seq("m01", "m02", "m03"))
+  }
+
+  test("the driver's school-year fallback matches Temporal.schoolYearStart in every month") {
+    import org.apache.spark.sql.functions.{col, date_format, to_date}
+    val dates = Seq("2024-01-31", "2024-02-29", "2024-03-01", "2024-04-15", "2024-05-31", "2024-06-30",
+      "2024-07-01", "2024-08-01", "2024-09-15", "2024-10-31", "2024-11-30", "2024-12-31")
+    val onSpark = dates.toDF("d")
+      .select(date_format(graft.ops.Temporal.schoolYearStart(to_date(col("d"))), "yyyy-MM-dd"))
+      .as[String].collect().toSeq
+    assert(dates.map(d => ZoomPipeline.schoolYearStart(LocalDate.parse(d)).toString) == onSpark)
+    assert(onSpark.distinct == Seq("2023-08-01", "2024-08-01"))
   }
 }
