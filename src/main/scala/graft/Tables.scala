@@ -1,8 +1,14 @@
 package graft
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Harness-contract table loader: one parquet file per table under the
   * scale-factor dir (/root/repo/TESTDATA.md). All declared queries read
@@ -40,8 +46,33 @@ object Tables {
       _ => new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]())
     perSession.computeIfAbsent((sfDir, table), { _ =>
       if (table == "events") loadEvents(spark, sfDir)
-      else spark.read.parquet(s"$sfDir/$table.parquet")
+      else read(spark, s"$sfDir/$table.parquet")
     })
+  }
+
+  /** `spark.read.parquet(file)`. A single file is read without Spark's
+    * schema-inference job: the schema comes from its footer, read on the
+    * driver. A directory (specs write tables as Spark output directories)
+    * keeps Spark's inference, which also finds partition columns and
+    * summary files; so does a missing path, which fails as before. */
+  private def read(spark: SparkSession, file: String): DataFrame = {
+    val path = new Path(file)
+    val isFile = try path.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(path).isFile
+      catch { case _: FileNotFoundException => false }
+    if (isFile) spark.read.schema(footerSchema(spark, file)).parquet(file)
+    else spark.read.parquet(file)
+  }
+
+  /** The schema `spark.read.parquet` infers for one file: the Spark schema
+    * stored under its row-metadata key when the file carries one, else
+    * the Parquet schema converted under the session conf (binary-as-string,
+    * INT96, NTZ and nanos settings included). */
+  private[graft] def footerSchema(spark: SparkSession, file: String): StructType = {
+    val path = new Path(file)
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, spark.sessionState.newHadoopConf()))
+    val footer = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(path, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   /** Register every harness table as a temp view so the engine's FULL
@@ -63,7 +94,7 @@ object Tables {
     */
   private def loadEvents(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = read(spark, s"$sfDir/events.parquet")
     if (raw.schema("ts").dataType == LongType)
       raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else raw

@@ -7,10 +7,10 @@ import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DateType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DateType, StringType, StructField, StructType}
 
 import graft.ops.Ingest
 import graft.schemas.Schemas
@@ -31,17 +31,29 @@ import graft.sources.PagedApi.PagedApiClient
   *  - "today" is a parameter (`runDate`), never the wall clock
   *    (/root/reference/main.py:214,244), so runs are deterministic
   *
+  * Participants and settings are loaded per meetings day: both tables are
+  * partitioned by the `run_date` of the meetings they belong to, so a day
+  * is one partition of one file, and a table's pending days are the
+  * `run_date` values listed under `meetings` less those listed under it.
+  * Departures from main.py's per-meeting anti-joins (main.py:79-85,
+  * main.py:310-316) that this brings, on purpose:
+  *  - a meeting without participants on a day whose other meetings have
+  *    some is not fetched again (the reference re-fetches it on every run,
+  *    a cost that grows with the warehouse); a day whose meetings all
+  *    return nothing writes no partition and stays pending;
+  *  - a `uuid` or `id` listed on two days is loaded under each day, as
+  *    `meetings` stores it;
+  *  - a failure is recovered at day grain: a stage writes the complete days
+  *    before the failing key, and a rerun fetches the whole failed day.
+  *
   * Driver-edge rule (100 TB posture): the driver holds
-  *  - one name per *processed* key: a keyed table's keys are its partition
-  *    values, listed from its root directory (the file-index read this
-  *    replaced held the same names plus a `FileStatus` per leaf file);
-  *  - a keyed stage's meetings key column (`uuid` or `id`), read in one
-  *    job and diffed against the processed names on the driver: the same
-  *    order of names as the processed listing it already holds, one per
-  *    loaded meeting (ROADMAP G);
+  *  - one name per loaded day: the `run_date` directories of `meetings` and
+  *    of the keyed table, each from one listing of its root;
+  *  - the pending days' meetings keys (`uuid` or `id`), read in one job
+  *    from those days' directories only;
   *  - the keyed loads' fetched JSON: keys are fetched one by one and
   *    written per batch of at most [[ZoomPipeline.BatchChars]] characters
-  *    plus one key's records.
+  *    plus one day's records.
   * Data rows are never collected.
   */
 class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
@@ -72,33 +84,60 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
     * committed partition; staging, `_temporary` and `_SUCCESS` entries do
     * not carry the prefix. Spark's null partition
     * (`__HIVE_DEFAULT_PARTITION__`) is skipped. An absent table has none.
+    * A partition directory of another column fails: the root holds another
+    * layout (participants and settings were once partitioned per meeting,
+    * by `meeting_uuid` and `meeting_id`), which must not be mixed with this
+    * one under one root.
     */
   private def partitionValues(table: String, column: String): Seq[String] = {
     val (fs, root) = fileSystemPath(table)
     val prefix = s"$column="
-    val entries = try fs.listStatus(root).toSeq catch { case _: FileNotFoundException => Nil }
-    entries.collect {
-      case e if e.isDirectory && e.getPath.getName.startsWith(prefix) =>
-        e.getPath.getName.drop(prefix.length)
-    }.filterNot(_ == ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
+    val dirs = try fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath)
+      catch { case _: FileNotFoundException => Nil }
+    dirs.find(d => d.getName.contains('=') && !d.getName.startsWith(prefix)).foreach { d =>
+      throw new IllegalStateException(
+        s"$d: $table is partitioned by $column and this directory belongs to another layout; move the old table out of $root")
+    }
+    dirs.collect { case d if d.getName.startsWith(prefix) => d.getName.drop(prefix.length) }
+      .filterNot(_ == ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
       .map(ExternalCatalogUtils.unescapePathName)
   }
 
+  /** The keyed stages' work list: the `run_date`s of `meetings` not yet in
+    * `table`, oldest first, each with its meetings' distinct non-null
+    * `keyCol` values in order. No Spark job runs when no day is pending;
+    * otherwise the keys are read in one job from the pending days'
+    * directories only (`basePath` plus each day's path), so no file index
+    * lists every loaded day. A pending day without a key is left out.
+    */
+  private def pendingDays[K: Encoder: Ordering](table: String, keyCol: String): Seq[(String, Seq[K])] = {
+    val loaded = partitionValues(table, "run_date").toSet
+    val days = partitionValues("meetings", "run_date").filterNot(loaded).sorted
+    if (days.isEmpty) return Nil
+    val root = path("meetings")
+    val keys = spark.read.schema(partitionedSchemas("meetings")).option("basePath", root)
+      .parquet(days.map(d => s"$root/${ExternalCatalogUtils.getPartitionPathString("run_date", d)}"): _*)
+      .select(col("run_date").cast(StringType), col(keyCol))
+      .filter(col(keyCol).isNotNull)
+      .as(Encoders.tuple(Encoders.STRING, implicitly[Encoder[K]]))
+      .collect().toSeq.groupMap(_._1)(_._2)
+    days.flatMap(d => keys.get(d).map(k => d -> k.distinct.sorted))
+  }
+
   /** Read schemas of the partitioned tables: the declared data columns,
-    * then the partition column at a declared type. A declared schema
-    * turns off Spark's partition-value type inference, which parses a
-    * meeting_uuid made of digits and one `e` (`123e4567…`) as a decimal
-    * with a huge exponent and then spins on it for minutes. `run_date`
-    * keeps the date type inference gives it; `meeting_id` is the bigint
-    * it is written as (inference would make small ids int).
+    * then the partition column at a declared type. `run_date` keeps the
+    * date type inference gives it; a declared schema turns off Spark's
+    * partition-value type inference, which parses a `group_id` made of
+    * digits and one `e` (`123e4567…`) as a decimal with a huge exponent
+    * and then spins on it for minutes.
     */
   private val partitionedSchemas: Map[String, StructType] = {
     def withPartition(s: StructType, c: String, t: DataType) =
       StructType(s.filterNot(_.name == c) :+ StructField(c, t))
     Map(
       "meetings" -> withPartition(Schemas.meetings, "run_date", DateType),
-      "participants" -> withPartition(Schemas.participants, "meeting_uuid", StringType),
-      "meeting_settings" -> withPartition(Schemas.meetingSettings, "meeting_id", LongType),
+      "participants" -> withPartition(Schemas.participants, "run_date", DateType),
+      "meeting_settings" -> withPartition(Schemas.meetingSettings, "run_date", DateType),
       "group_members" -> withPartition(Schemas.groupMembers, "group_id", StringType))
   }
 
@@ -117,41 +156,45 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
   private def keyRecords(entity: String, key: String): Seq[String] =
     PagedApi.fetchAllPages(client, entity, Some(key), sleep = sleep).flatMap(_.records)
 
-  /** A keyed batch → typed rows, the key injected as `keyCol` over any
-    * `keyCol` the JSON carries (F5, main.py:165). */
+  /** A keyed batch → typed rows and its `unit`, the key injected as
+    * `keyCol` over any `keyCol` the JSON carries (F5, main.py:165). */
   private def keyedRows(batch: DataFrame, schema: StructType, keyCol: String): DataFrame =
-    batch.select(from_json(col("value"), schema).as("r"), col("key"))
-      .select("r.*", "key")
+    batch.select(from_json(col("value"), schema).as("r"), col("key"), col("unit"))
+      .select("r.*", "key", "unit")
       .withColumn(keyCol, col("key"))
       .drop("key")
 
   /** Keyed load loop (S4 analog) of participants, settings and group
-    * members: fetches each key in order, buffers its records as (`key`,
+    * members over units of keys (a meetings day, or one group): fetches
+    * each unit's keys in order, buffers their records as (`unit`, `key`,
     * `value`) rows and hands `write` one frame per batch, a batch ending at
-    * `bound` characters or at the last key (never inside a key, whose
-    * second write would overwrite the first). One batch is one job, so a
-    * key's partition lands whole or not at all. A fetch failure writes the
-    * keys fetched before it, then propagates. A key without records writes
-    * no partition; if no fetched key had any, the empty frame is written
-    * once so the table exists.
+    * `bound` characters or at the last unit (never inside a unit, whose
+    * partition a second write would overwrite). One batch is one job, so a
+    * unit's partition lands whole or not at all. A fetch failure writes the
+    * complete units fetched before it, then propagates; the failing unit's
+    * records are dropped. A unit without records writes no partition; if
+    * no fetched unit had any, the empty frame is written once so the table
+    * exists.
     */
-  private[graft] def loadKeyed[K](keys: Seq[K], bound: Long = ZoomPipeline.BatchChars)
+  private[graft] def loadKeyed[K](units: Seq[(String, Seq[K])], bound: Long = ZoomPipeline.BatchChars)
                                  (fetch: K => Seq[String])(write: DataFrame => Unit): Unit = {
-    val batch = ArrayBuffer.empty[(String, String)]
+    val batch = ArrayBuffer.empty[(String, String, String)]
     var chars = 0L
     var fetched = false
     var wrote = false
     def flush(): Unit =
       if (batch.nonEmpty || (fetched && !wrote)) {
-        write(batch.toSeq.toDF("key", "value"))
+        write(batch.toSeq.toDF("unit", "key", "value"))
         batch.clear()
         chars = 0
         wrote = true
       }
-    keys.foreach { k =>
-      val records = try fetch(k) catch { case NonFatal(e) => flush(); throw e }
+    units.foreach { case (unit, keys) =>
+      val records = try keys.flatMap(k => fetch(k).map((unit, k.toString, _)))
+        catch { case NonFatal(e) => flush(); throw e }
       fetched = true
-      records.foreach { r => batch += ((k.toString, r)); chars += r.length }
+      batch ++= records
+      chars += records.map(_._3.length.toLong).sum
       if (chars >= bound) flush()
     }
     flush()
@@ -207,43 +250,35 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
     None // watermark caught up, or every remaining day empty
   }
 
-  /** Participants (§3.2 step 2): the meetings with no participant rows
-    * yet (main.py:79-85) — the non-null `uuid`s of `meetings`, collected in
-    * one job, less the `meeting_uuid` partition values listed from the
-    * table root. Per-uuid paged fetch, one write per bounded batch of uuids
-    * ([[loadKeyed]]); each meeting's rows land in its meeting_uuid
-    * partition, so a retry overwrites instead of duplicating.
-    *
-    * A meeting the API gives no participants writes no partition, so it
-    * stays unprocessed and is fetched again on every later run: the
-    * reference's anti-join semantics, kept on purpose (ZoomPipelineSpec's
-    * flagship flow re-fetches its `m3`). Returns meetings processed.
+  /** Participants (§3.2 step 2) of the meetings days not loaded yet
+    * ([[pendingDays]]; the reference anti-joins per meeting, main.py:79-85).
+    * Per-uuid paged fetch in day order, one write per bounded batch of days
+    * ([[loadKeyed]]) that puts each day's rows, `meeting_uuid` injected,
+    * in one file of its run_date partition, so a retry overwrites instead
+    * of duplicating. Returns the keys fetched (a uuid listed on two days
+    * counts twice).
     */
   def loadParticipants(): Int = {
-    if (!tableExists("meetings")) return 0
-    val processed = partitionValues("participants", "meeting_uuid").toSet
-    val uuids = table("meetings").select("uuid").filter(col("uuid").isNotNull)
-      .as[String].collect().filterNot(processed).distinct.sorted.toSeq
-    loadKeyed(uuids)(keyRecords("participants", _)) { batch =>
+    val days = pendingDays[String]("participants", "uuid")
+    loadKeyed(days)(keyRecords("participants", _)) { batch =>
       keyedRows(batch, Schemas.participants, "meeting_uuid")
-        .write.mode("overwrite").partitionBy("meeting_uuid").parquet(path("participants"))
+        .withColumnRenamed("unit", "run_date")
+        .coalesce(1)
+        .write.mode("overwrite").partitionBy("run_date").parquet(path("participants"))
     }
-    uuids.length
+    days.map(_._2.size).sum
   }
 
-  /** Meeting settings (§3.2 step 3): the meetings without settings
-    * (main.py:310-316) — the non-null `id`s of `meetings`, collected in one
-    * job, less the `meeting_id` partition values listed from the table
-    * root. Single-shot fetch per id, one write per bounded batch of ids
-    * ([[loadKeyed]]), nested-JSON flatten with null defaults
-    * (main.py:324-334). Returns meetings processed.
+  /** Meeting settings (§3.2 step 3) of the meetings days not loaded yet
+    * ([[pendingDays]]; the reference anti-joins per meeting,
+    * main.py:310-316). Single-shot fetch per id in day order, one write per
+    * bounded batch of days ([[loadKeyed]]), one file per run_date
+    * partition, nested-JSON flatten with null defaults (main.py:324-334).
+    * Returns the keys fetched.
     */
   def loadMeetingSettings(): Int = {
-    if (!tableExists("meetings")) return 0
-    val processed = partitionValues("meeting_settings", "meeting_id").map(_.toLong).toSet
-    val ids = table("meetings").select("id").filter(col("id").isNotNull)
-      .as[Long].collect().filterNot(processed).distinct.sorted.toSeq
-    loadKeyed(ids)(id =>
+    val days = pendingDays[Long]("meeting_settings", "id")
+    loadKeyed(days)(id =>
       PagedApi.fetchWithRetry(client, "settings", Some(id.toString), None, sleep = sleep).records
     ) { batch =>
       batch
@@ -254,10 +289,12 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
           get_json_object(col("value"), "$.settings.authentication_domains").as("authentication_domains"),
           get_json_object(col("value"), "$.settings.authentication_name").as("authentication_name"),
           get_json_object(col("value"), "$.settings.meeting_authentication").try_cast("boolean").as("meeting_authentication"),
-          get_json_object(col("value"), "$.settings.waiting_room").try_cast("boolean").as("waiting_room"))
-        .write.mode("overwrite").partitionBy("meeting_id").parquet(path("meeting_settings"))
+          get_json_object(col("value"), "$.settings.waiting_room").try_cast("boolean").as("waiting_room"),
+          col("unit").as("run_date"))
+        .coalesce(1)
+        .write.mode("overwrite").partitionBy("run_date").parquet(path("meeting_settings"))
     }
-    ids.length
+    days.map(_._2.size).sum
   }
 
   /** Permission groups snapshot (S3 single-shot scan, main.py:125-135):
@@ -297,8 +334,9 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
     * duplicating. Returns total member rows.
     */
   def loadGroupMembers(): Long = {
-    loadKeyed(groupIds())(keyRecords("group_members", _)) { batch =>
+    loadKeyed(groupIds().map(g => g -> Seq(g)))(keyRecords("group_members", _)) { batch =>
       keyedRows(batch, Schemas.groupMembers, "group_id")
+        .drop("unit")
         .write.mode("overwrite").partitionBy("group_id").parquet(path("group_members"))
     }
     if (tableExists("group_members")) table("group_members").count() else 0L

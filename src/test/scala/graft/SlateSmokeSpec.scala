@@ -26,6 +26,28 @@ class SlateSmokeSpec extends SparkTestBase {
       s"${failures.size} queries error at sf0.001:\n${failures.mkString("\n")}")
   }
 
+  // every query reads through Tables.load, which takes each table's schema
+  // from its Parquet footer on the driver instead of an inference job
+  test("Tables: the footer schema of every table equals spark.read.parquet's") {
+    withSQLConf("spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+      Tables.names.foreach { t =>
+        val file = s"$sf/$t.parquet"
+        assert(Tables.footerSchema(spark, file) == spark.read.parquet(file).schema, t)
+      }
+    }
+  }
+
+  test("Tables: loading every table of a fresh directory launches no Spark job") {
+    import java.nio.file.{Files, Paths}
+    val fresh = Files.createTempDirectory("tables")
+    Tables.names.foreach(t => Files.copy(Paths.get(sf, s"$t.parquet"), fresh.resolve(s"$t.parquet")))
+    assert(jobsLaunched(Tables.names.foreach(Tables.load(spark, fresh.toString, _))) == 0)
+    Tables.names.filterNot(_ == "events").foreach { t =>
+      assert(Tables.load(spark, fresh.toString, t).schema == spark.read.parquet(s"$fresh/$t.parquet").schema, t)
+    }
+    assert(Tables.load(spark, fresh.toString, "orders").count() == Tables.load(spark, sf, "orders").count())
+  }
+
   test("oracle keys are a subset of query keys (no orphaned oracle SQL)") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle SQL without a matching query: $orphans")

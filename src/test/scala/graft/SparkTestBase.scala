@@ -26,6 +26,21 @@ abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterEach {
     super.afterEach()
   }
 
+  /** Spark jobs started while `body` runs. */
+  def jobsLaunched(body: => Unit): Int = {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { body; ListenerBusDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get
+  }
+
   /** Run `body` with session confs set, restoring prior values after —
     * the shared session means leaked confs would poison later suites. */
   def withSQLConf[T](pairs: (String, String)*)(body: => T): T = {

@@ -104,10 +104,15 @@ class ZoomPipelineSpec extends SparkTestBase {
     val s102 = s.filter($"meeting_id" === 102).head()
     assert(s102.isNullAt(s102.fieldIndex("waiting_room"))) // .get default → null
 
-    // full rerun: nothing changes (m3 still has zero participants → refetched
-    // but writes nothing, matching the reference's anti-join semantics)
+    // full rerun: nothing changes. 08-01 is loaded; 08-02, whose only
+    // meeting m3 has no participants, wrote no day and is still pending, so
+    // m3 alone is fetched again and writes nothing
     assert(p.loadMeetings(runDate).isEmpty)
-    assert(p.loadParticipants() == 1) // only the empty m3 is still "new"
+    assert(p.table("participants").select("run_date").distinct().as[java.sql.Date].collect().toSeq ==
+      Seq(java.sql.Date.valueOf("2023-08-01")))
+    val before = client.fetchCount.get()
+    assert(p.loadParticipants() == 1)
+    assert(client.fetchCount.get() == before + 1) // m3's one empty page
     assert(p.loadMeetingSettings() == 0)
     assert(p.table("meetings").count() == 3)
     assert(p.table("participants").count() == 3)
@@ -118,8 +123,8 @@ class ZoomPipelineSpec extends SparkTestBase {
     import org.apache.spark.sql.types.{DateType, LongType, StringType}
     import org.scalatest.concurrent.TimeLimits.failAfter
     import org.scalatest.time.SpanSugar._
-    // digits and one `e`: partition-value inference reads it as a decimal
-    // with a huge exponent
+    // digits and one `e`: partition-value inference would read it as a
+    // decimal with a huge exponent; it is a data column of a run_date day
     val uuid = "123e4567000"
     val fx: Map[(String, Option[String]), Seq[ApiPage]] = Map(
       ("meetings", Some("2023-08-01")) -> Seq(ApiPage(Seq(
@@ -268,35 +273,22 @@ class ZoomPipelineSpec extends SparkTestBase {
   private def dayOf(n: Int): Map[(String, Option[String]), Seq[ApiPage]] =
     dayWith((1 to n).map(i => f"m$i%02d"))
 
-  /** One day of meetings with these uuids; the i-th (from 1) has id
-    * 3000000000 + i. */
-  private def dayWith(uuids: Seq[String]): Map[(String, Option[String]), Seq[ApiPage]] = {
-    val ids = uuids.indices.map(i => 3000000001L + i)
+  /** One day of meetings with these uuids; the i-th (from 0) has id
+    * `firstId` + i. */
+  private def dayWith(uuids: Seq[String], day: String = "2023-08-01",
+                      firstId: Long = 3000000001L): Map[(String, Option[String]), Seq[ApiPage]] = {
+    val ids = uuids.indices.map(firstId + _)
     def part(p: Int) =
-      s"""{"id":"p$p","user_id":"u$p","user_name":"U$p","meeting_uuid":"stale","join_time":"2023-08-01T10:0$p:00Z"}"""
+      s"""{"id":"p$p","user_id":"u$p","user_name":"U$p","meeting_uuid":"stale","join_time":"${day}T10:0$p:00Z"}"""
     val meetings = uuids.zip(ids).map { case (u, id) =>
-      s"""{"uuid":"$u","id":$id,"topic":"t","start_time":"2023-08-01T10:00:00+00:00","duration":30}"""
+      s"""{"uuid":"$u","id":$id,"topic":"t","start_time":"${day}T10:00:00+00:00","duration":30}"""
     }
     Map[(String, Option[String]), Seq[ApiPage]](
-      ("meetings", Some("2023-08-01")) -> Seq(ApiPage(meetings, None))) ++
+      ("meetings", Some(day)) -> Seq(ApiPage(meetings, None))) ++
       uuids.map(u => ("participants", Option(u)) ->
         Seq(ApiPage(Seq(part(1), part(2)), Some("1")), ApiPage(Seq(part(3)), None))) ++
       ids.map(id => ("settings", Option(id.toString)) ->
         Seq(ApiPage(Seq("""{"settings":{"waiting_room":true}}"""), None)))
-  }
-
-  private def jobsLaunched(body: => Unit): Int = {
-    import org.apache.spark.ListenerBusDrain
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try { body; ListenerBusDrain(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(l)
-    n.get
   }
 
   test("keyed loads write one job per batch: 3 and 30 keys launch the same jobs") {
@@ -310,14 +302,20 @@ class ZoomPipelineSpec extends SparkTestBase {
       }
       val parts = p.table("participants")
       assert(parts.count() == 3L * n)
-      // the key column, not the JSON's meeting_uuid, names the partition
+      // the key column, not the JSON's meeting_uuid, is the meeting_uuid
       assert(parts.filter($"meeting_uuid" === "m01").count() == 3)
       assert(p.table("meeting_settings").select("meeting_id").as[Long].collect().sorted.toSeq ==
         (1 to n).map(3000000000L + _))
+      // each table holds the day in one file
+      for (t <- Seq("participants", "meeting_settings"))
+        assert(new java.io.File(wh, s"$t/run_date=2023-08-01").list().count(_.startsWith("part-")) == 1, t)
       jobs
     }
     assert(load(3) == load(30))
   }
+
+  /** Each key its own unit, as group members are loaded. */
+  private def perKey(keys: String*): Seq[(String, Seq[String])] = keys.map(k => k -> Seq(k))
 
   test("loadKeyed: batches end at the bound, never inside a key; rows are the same") {
     val (p, _) = freshPipeline()
@@ -325,7 +323,7 @@ class ZoomPipelineSpec extends SparkTestBase {
     def run(bound: Long): (Int, Seq[(String, String)]) = {
       val out = Files.createTempDirectory("keyed").toString
       var writes = 0
-      p.loadKeyed(records.keys.toSeq.sorted, bound)(records) { batch =>
+      p.loadKeyed(perKey(records.keys.toSeq.sorted: _*), bound)(records) { batch =>
         writes += 1
         batch.write.mode("overwrite").partitionBy("key").parquet(out)
       }
@@ -342,7 +340,7 @@ class ZoomPipelineSpec extends SparkTestBase {
     val (p, _) = freshPipeline()
     var written = Seq.empty[Seq[String]]
     val e = intercept[PagedApi.TransientApiError] {
-      p.loadKeyed(Seq("a", "b", "c"))(k =>
+      p.loadKeyed(perKey("a", "b", "c"))(k =>
         if (k == "b") throw new PagedApi.TransientApiError("b down") else Seq(s"{$k}")
       )(batch => written :+= batch.select("key").as[String].collect().toSeq)
     }
@@ -350,7 +348,7 @@ class ZoomPipelineSpec extends SparkTestBase {
 
     var writes = 0
     intercept[IllegalStateException] { // the first key's batch fails inside the loop
-      p.loadKeyed(Seq("a", "b"), bound = 1)(k => Seq(k)) { _ =>
+      p.loadKeyed(perKey("a", "b"), bound = 1)(k => Seq(k)) { _ =>
         writes += 1
         throw new IllegalStateException("disk")
       }
@@ -359,35 +357,38 @@ class ZoomPipelineSpec extends SparkTestBase {
 
     // every key empty: the empty frame is written once; no keys: nothing
     var empties = Seq.empty[Long]
-    p.loadKeyed(Seq("a", "b"))(_ => Nil)(batch => empties :+= batch.count())
-    p.loadKeyed(Seq.empty[String])(_ => Nil)(batch => empties :+= batch.count())
+    p.loadKeyed(perKey("a", "b"))(_ => Nil)(batch => empties :+= batch.count())
+    p.loadKeyed(perKey())(_ => Nil)(batch => empties :+= batch.count())
     assert(empties == Seq(0L))
   }
 
-  test("participants: a key that keeps failing leaves the keys before it; a rerun completes") {
+  test("a failing participants key leaves the days before it; a rerun completes") {
     import graft.pipeline.ZoomRunner
-    val fx = dayOf(3)
+    // 08-01: m01..m03; 08-02: m04..m06, of which m05 keeps failing
+    val fx = dayOf(3) ++ dayWith(Seq("m04", "m05", "m06"), "2023-08-02", 3000000004L)
     val healthy = new FixtureClient(fx)
     val failing = new PagedApi.PagedApiClient {
       def fetchPage(e: String, k: Option[String], t: Option[String]) =
-        if (e == "participants" && k.contains("m02")) throw new PagedApi.TransientApiError("m02 down")
+        if (e == "participants" && k.contains("m05")) throw new PagedApi.TransientApiError("m05 down")
         else healthy.fetchPage(e, k, t)
     }
     val wh = Files.createTempDirectory("zoomwh").toString
-    val runDate = LocalDate.parse("2023-08-02")
+    val runDate = LocalDate.parse("2023-08-03")
     val report = ZoomRunner.run(new ZoomPipeline(spark, failing, wh, sleep = _ => ()),
       ZoomRunner.JobFlags(meetings = true), runDate, _ => ())
-    assert(!report.success && report.errorMessage.exists(_.contains("m02 down")))
+    assert(!report.success && report.errorMessage.exists(_.contains("m05 down")))
     assert(report.stagesRun == Seq("load_meetings"))
 
+    // the complete day before the failing key, and nothing of its own day
+    // (m04 was fetched but its day did not complete)
     val p = new ZoomPipeline(spark, healthy, wh, sleep = _ => ())
-    assert(p.table("participants").select("meeting_uuid").distinct().as[String].collect().toSeq ==
-      Seq("m01"))
-    assert(p.loadParticipants() == 2) // m02 and m03
-    assert(p.loadParticipants() == 0) // the anti-join drains
+    assert(p.table("participants").select("meeting_uuid").distinct().as[String].collect().sorted.toSeq ==
+      Seq("m01", "m02", "m03"))
+    assert(p.loadParticipants() == 3) // the whole of 08-02: m04, m05 and m06
+    assert(p.loadParticipants() == 0) // no day is pending
     val parts = p.table("participants")
-    assert(parts.count() == 9)
-    assert(parts.select("meeting_uuid", "id").distinct().count() == 9)
+    assert(parts.count() == 18)
+    assert(parts.select("meeting_uuid", "id").distinct().count() == 18)
   }
 
   /** Fixture client that records every (entity, key) it is asked for. */
@@ -423,11 +424,11 @@ class ZoomPipelineSpec extends SparkTestBase {
     val p = new ZoomPipeline(spark, client, wh, sleep = _ => ())
     assert(p.loadMeetings(LocalDate.parse("2023-08-02")).isDefined)
     // what a job that died before its commit leaves behind
-    val staged = java.nio.file.Paths.get(wh, "participants", ".spark-staging-x", "meeting_uuid=m9")
+    val staged = java.nio.file.Paths.get(wh, "participants", ".spark-staging-x", "run_date=2023-08-01")
     Files.createDirectories(staged)
     Files.write(staged.resolve("part-0.parquet"), Array[Byte](1, 2, 3))
-    Files.createDirectories(java.nio.file.Paths.get(wh, "participants", "_temporary", "0", "meeting_uuid=m9"))
-    Files.createDirectories(java.nio.file.Paths.get(wh, "meeting_settings", "_temporary", "0", "meeting_id=3000000002"))
+    Files.createDirectories(java.nio.file.Paths.get(wh, "participants", "_temporary", "0", "run_date=2023-08-01"))
+    Files.createDirectories(java.nio.file.Paths.get(wh, "meeting_settings", "_temporary", "0", "run_date=2023-08-01"))
 
     assert(p.loadParticipants() == 2)
     assert(p.loadMeetingSettings() == 2)
@@ -445,6 +446,8 @@ class ZoomPipelineSpec extends SparkTestBase {
     assert(p.loadParticipants() == 1)
     assert(p.table("participants").select("meeting_uuid").distinct().as[String].collect().toSeq ==
       Seq(uuid))
+    // a data column: the table root holds the day's directory only
+    assert(new java.io.File(wh, "participants").list().filter(_.contains("=")).toSeq == Seq("run_date=2023-08-01"))
     assert(p.loadParticipants() == 0)
   }
 
@@ -582,9 +585,29 @@ class ZoomPipelineSpec extends SparkTestBase {
         ("settings", Some(id.toString)) -> Seq(ApiPage(Seq("""{"settings":{"waiting_room":true}}"""), None)))
     }.toMap
 
-  test("a daily run on a 4-day and a 30-day warehouse launches the same jobs") {
+  /** Files read by the file scans of the queries `body` runs. */
+  private def filesRead(body: => Unit): Long = {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val files = new java.util.concurrent.atomic.AtomicLong
+    val l = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        files.addAndGet(collect(qe.executedPlan) { case s: FileSourceScanExec => s.metrics("numFiles").value }.sum)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try { body; ListenerBusDrain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(l)
+    files.get
+  }
+
+  test("a daily run on a 4-day and a 40-day warehouse: same jobs, same files read") {
     import graft.pipeline.ZoomRunner
-    def daily(days: Int): Int = {
+    // 40 days pass Spark's 32-path threshold for a parallel listing job
+    def daily(days: Int): (Int, Long) = {
       val first = LocalDate.parse("2023-08-01")
       val p = new ZoomPipeline(spark, new FixtureClient(daysOf(days + 1)),
         Files.createTempDirectory("zoomwh").toString, sleep = _ => ())
@@ -593,13 +616,21 @@ class ZoomPipelineSpec extends SparkTestBase {
         assert(report.success, report.errorMessage)
       }
       run(first.plusDays(days.toLong))
-      val jobs = jobsLaunched(run(first.plusDays(days + 1L)))
+      var files = 0L
+      val jobs = jobsLaunched { files = filesRead(run(first.plusDays(days + 1L))) }
+      // caught up: both keyed stages list and stop
+      assert(jobsLaunched {
+        assert(p.loadParticipants() == 0)
+        assert(p.loadMeetingSettings() == 0)
+      } == 0)
       assert(p.table("meetings").count() == days + 1)
       assert(p.table("participants").count() == days + 1)
       assert(p.table("meeting_settings").count() == days + 1)
-      jobs
+      (jobs, files)
     }
-    assert(daily(4) == daily(30))
+    val (jobs, files) = daily(4)
+    assert(jobs == 5 && files == 2) // the day's meetings file, once per keyed stage
+    assert(daily(40) == (jobs, files))
   }
 
   test("the day's meetings are deduped and written in one job, with no Exchange") {
@@ -637,5 +668,68 @@ class ZoomPipelineSpec extends SparkTestBase {
       .as[String].collect().toSeq
     assert(dates.map(d => ZoomPipeline.schoolYearStart(LocalDate.parse(d)).toString) == onSpark)
     assert(onSpark.distinct == Seq("2023-08-01", "2024-08-01"))
+  }
+
+  test("loadKeyed: a batch never splits a day; a failure writes the complete days before it") {
+    val (p, _) = freshPipeline()
+    val days = Seq("d1" -> Seq("a", "b"), "d2" -> Seq("c"), "d3" -> Seq("d", "e"))
+    def run(bound: Long, fail: String = ""): Seq[Seq[(String, String)]] = {
+      var written = Seq.empty[Seq[(String, String)]]
+      try p.loadKeyed(days, bound)(k => if (k == fail) throw new PagedApi.TransientApiError(k) else Seq(k))(
+        batch => written :+= batch.select("unit", "key").as[(String, String)].collect().toSeq)
+      catch { case _: PagedApi.TransientApiError => () }
+      written
+    }
+    val all = Seq("d1" -> "a", "d1" -> "b", "d2" -> "c", "d3" -> "d", "d3" -> "e")
+    assert(run(ZoomPipeline.BatchChars) == Seq(all))
+    assert(run(1) == Seq(all.take(2), all.slice(2, 3), all.drop(3))) // one day per batch
+    assert(run(2) == Seq(all.take(2), all.drop(2))) // d1 reaches the bound; d2 and d3 then
+    assert(run(ZoomPipeline.BatchChars, fail = "e") == Seq(all.take(3))) // d3's d is dropped
+    assert(run(ZoomPipeline.BatchChars, fail = "b").isEmpty)
+  }
+
+  test("a participants or settings table in the per-meeting layout fails loudly") {
+    for ((table, old) <- Seq("participants" -> "meeting_uuid=m01", "meeting_settings" -> "meeting_id=3000000001")) {
+      val wh = Files.createTempDirectory("zoomwh").toString
+      val p = new ZoomPipeline(spark, new FixtureClient(dayOf(1)), wh, sleep = _ => ())
+      assert(p.loadMeetings(LocalDate.parse("2023-08-02")).isDefined)
+      Files.createDirectories(java.nio.file.Paths.get(wh, table, old))
+      val e = intercept[IllegalStateException] {
+        if (table == "participants") p.loadParticipants() else p.loadMeetingSettings()
+      }
+      assert(e.getMessage.contains(s"$table/$old"), e.getMessage)
+      assert(!Files.exists(java.nio.file.Paths.get(wh, table, "run_date=2023-08-01")))
+    }
+  }
+
+  test("a meeting without participants on a loaded day is not fetched again; an empty day is") {
+    // 08-01: m1 with participants, m2 without; 08-02: m3 without
+    val fx = dayWith(Seq("m1", "m2")) ++ dayWith(Seq("m3"), "2023-08-02", 3000000003L) ++
+      Seq("m2", "m3").map(u => ("participants", Option(u)) -> Seq(ApiPage(Seq.empty, None)))
+    val client = new RecordingClient(fx)
+    val p = new ZoomPipeline(spark, client, Files.createTempDirectory("zoomwh").toString, sleep = _ => ())
+    while (p.loadMeetings(LocalDate.parse("2023-08-03")).isDefined) ()
+    assert(p.loadParticipants() == 3)
+    assert(p.loadParticipants() == 1) // 08-02 wrote no day: m3 again, m2 not
+    assert(client.keys("participants").count(_.contains("m1")) == 2) // its two pages, once
+    assert(client.keys("participants").count(_.contains("m2")) == 1)
+    assert(client.keys("participants").count(_.contains("m3")) == 2)
+    assert(p.table("participants").select("meeting_uuid").distinct().as[String].collect().toSeq == Seq("m1"))
+  }
+
+  test("a meeting listed on two days is loaded under each day") {
+    val fx = dayWith(Seq("m1")) ++ dayWith(Seq("m1"), "2023-08-02")
+    val client = new RecordingClient(fx)
+    val p = new ZoomPipeline(spark, client, Files.createTempDirectory("zoomwh").toString, sleep = _ => ())
+    while (p.loadMeetings(LocalDate.parse("2023-08-03")).isDefined) ()
+    assert(p.table("meetings").count() == 2)
+    assert(p.loadParticipants() == 2 && p.loadMeetingSettings() == 2)
+    assert(client.keys("settings") == Seq(Some("3000000001"), Some("3000000001")))
+    val parts = p.table("participants")
+    assert(parts.count() == 6)
+    assert(parts.groupBy("run_date").count().as[(java.sql.Date, Long)].collect().sortBy(_._1.toString).toSeq ==
+      Seq(java.sql.Date.valueOf("2023-08-01") -> 3L, java.sql.Date.valueOf("2023-08-02") -> 3L))
+    assert(p.table("meeting_settings").select("meeting_id").as[Long].collect().toSeq ==
+      Seq(3000000001L, 3000000001L))
   }
 }
