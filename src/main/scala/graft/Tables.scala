@@ -2,7 +2,9 @@ package graft
 
 import java.io.FileNotFoundException
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -69,11 +71,20 @@ object Tables {
     * INT96, NTZ and nanos settings included). */
   private[graft] def footerSchema(spark: SparkSession, file: String): StructType = {
     val path = new Path(file)
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, spark.sessionState.newHadoopConf()))
+    val conf = spark.sessionState.newHadoopConf()
+    val reader = openParquet(path.getFileSystem(conf).getFileStatus(path), conf)
     val footer = try reader.getFooter finally reader.close()
     ParquetFileFormat.readSchemaFromFooter(new Footer(path, footer),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
+
+  /** Opens one Parquet file on the driver with read options built from
+    * `conf` (pass the session's Hadoop conf). The one-argument
+    * `ParquetFileReader.open(InputFile)` builds its options from a fresh
+    * Hadoop `Configuration`, which parses the default XML resources again
+    * on every call and ignores the session's settings. */
+  private[graft] def openParquet(file: FileStatus, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf), HadoopReadOptions.builder(conf).build())
 
   /** Register every harness table as a temp view so the engine's FULL
     * surface is reachable through plain `spark.sql(...)` — the way the

@@ -547,15 +547,15 @@ class ZoomPipelineSpec extends SparkTestBase {
     assert(p.table("meetings").select("uuid").as[String].collect().sorted.toSeq == Seq("m1", "m2"))
   }
 
-  /** Raised by [[stopAtMeetings]] at its first meetings fetch. */
+  /** Raised by [[stopAt]] at its first fetch of its entity. */
   private class FirstFetch extends RuntimeException
 
-  /** A client that throws [[FirstFetch]] when the meetings are first
-    * fetched, so a load counts only the work before that fetch. */
-  private def stopAtMeetings(fx: Map[(String, Option[String]), Seq[ApiPage]]) = new PagedApi.PagedApiClient {
+  /** A client that throws [[FirstFetch]] when `entity` is first fetched,
+    * so a load counts only the work before that fetch. */
+  private def stopAt(entity: String, fx: Map[(String, Option[String]), Seq[ApiPage]]) = new PagedApi.PagedApiClient {
     private val inner = new FixtureClient(fx)
     def fetchPage(e: String, k: Option[String], t: Option[String]): ApiPage =
-      if (e == "meetings") throw new FirstFetch else inner.fetchPage(e, k, t)
+      if (e == entity) throw new FirstFetch else inner.fetchPage(e, k, t)
   }
 
   test("loadMeetings starts no Spark job before its first fetch, nor when caught up") {
@@ -563,13 +563,24 @@ class ZoomPipelineSpec extends SparkTestBase {
     val wh = Files.createTempDirectory("zoomwh").toString
     val p = new ZoomPipeline(spark, new FixtureClient(fx), wh, sleep = _ => ())
     val runDate = LocalDate.parse("2023-08-02")
-    val stopped = new ZoomPipeline(spark, stopAtMeetings(fx), wh, sleep = _ => ())
+    val stopped = new ZoomPipeline(spark, stopAt("meetings", fx), wh, sleep = _ => ())
     // empty warehouse: the school-year fallback
     assert(jobsLaunched { intercept[FirstFetch](stopped.loadMeetings(runDate)) } == 0)
     assert(p.loadMeetings(runDate).contains(LocalDate.parse("2023-08-01")))
     // a loaded day: the watermark is its run_date partition
     assert(jobsLaunched { intercept[FirstFetch](stopped.loadMeetings(runDate.plusDays(3))) } == 0)
     assert(jobsLaunched { assert(p.loadMeetings(runDate).isEmpty) } == 0)
+  }
+
+  test("loadParticipants and loadMeetingSettings start no Spark job before their first fetch") {
+    val fx = dayOf(3)
+    val wh = Files.createTempDirectory("zoomwh").toString
+    assert(new ZoomPipeline(spark, new FixtureClient(fx), wh, sleep = _ => ())
+      .loadMeetings(LocalDate.parse("2023-08-02")).isDefined)
+    val participants = new ZoomPipeline(spark, stopAt("participants", fx), wh, sleep = _ => ())
+    val settings = new ZoomPipeline(spark, stopAt("settings", fx), wh, sleep = _ => ())
+    assert(jobsLaunched { intercept[FirstFetch](participants.loadParticipants()) } == 0)
+    assert(jobsLaunched { intercept[FirstFetch](settings.loadMeetingSettings()) } == 0)
   }
 
   /** `days` days from 2023-08-01 with one meeting each (`d01`, `d02`, …),
@@ -629,7 +640,8 @@ class ZoomPipelineSpec extends SparkTestBase {
       (jobs, files)
     }
     val (jobs, files) = daily(4)
-    assert(jobs == 5 && files == 2) // the day's meetings file, once per keyed stage
+    // the three writes; the keyed stages read the day's keys on the driver
+    assert(jobs == 3 && files == 0)
     assert(daily(40) == (jobs, files))
   }
 
@@ -731,5 +743,52 @@ class ZoomPipelineSpec extends SparkTestBase {
       Seq(java.sql.Date.valueOf("2023-08-01") -> 3L, java.sql.Date.valueOf("2023-08-02") -> 3L))
     assert(p.table("meeting_settings").select("meeting_id").as[Long].collect().toSeq ==
       Seq(3000000001L, 3000000001L))
+  }
+
+  test("the keyed stages fetch the distinct non-null keys a Spark read of the day gives") {
+    import org.apache.spark.sql.functions.col
+    val wh = Files.createTempDirectory("zoomwh").toString
+    val day = s"$wh/meetings/run_date=2023-08-01"
+    val base64 = "aB3/x+Yz9Qk7/Lw=="
+    def meeting(uuid: String, id: java.lang.Long) = org.apache.spark.sql.Row(uuid, id, "t", null, 30)
+    def write(rows: org.apache.spark.sql.Row*) =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), graft.schemas.Schemas.meetings)
+    // two part files, the second a retried page that repeats two meetings
+    write(meeting("m2", 3000000002L), meeting(base64, 3000000003L), meeting(null, 3000000004L))
+      .coalesce(1).write.parquet(day)
+    write(meeting("m2", 3000000002L), meeting(base64, 3000000003L), meeting("m1", null),
+      meeting("m5", Int.MaxValue + 1L)).coalesce(1).write.mode("append").parquet(day)
+    // a third part file without an id column
+    write(meeting("m6", 3000000006L)).select("uuid", "topic").coalesce(1).write.mode("append").parquet(day)
+    val names = new java.io.File(day).list().toSeq
+    assert(names.count(n => n.startsWith("part-") && n.endsWith(".parquet")) == 3, names)
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")), names)
+    Files.write(java.nio.file.Paths.get(day, "part-9.parquet._COPYING_"), Array[Byte](1, 2, 3))
+
+    def onSpark(key: String): Seq[String] =
+      spark.read.schema(graft.schemas.Schemas.meetings).parquet(day).select(col(key).cast("string"))
+        .filter(col(key).isNotNull).distinct().as[String].collect().toSeq
+    val uuids = onSpark("uuid").sorted
+    val ids = onSpark("id").map(_.toLong).sorted
+    assert(uuids == Seq("m1", "m2", "m5", "m6", base64).sorted)
+    assert(ids == Seq(3000000002L, 3000000003L, 3000000004L, Int.MaxValue + 1L).sorted)
+
+    val fx = dayWith(Seq("m1", "m2"), "2023-08-02")
+    val client = new RecordingClient(fx)
+    val p = new ZoomPipeline(spark, client, wh, sleep = _ => ())
+    assert(p.loadParticipants() == uuids.size && p.loadMeetingSettings() == ids.size)
+    assert(client.keys("participants").distinct == uuids.map(Some(_)))
+    assert(client.keys("settings") == ids.map(id => Some(id.toString)))
+
+    // a loaded day's files are not opened again: a daily run succeeds over
+    // a file there that is not Parquet
+    Files.write(java.nio.file.Paths.get(day, "part-99999.parquet"), Array[Byte](1, 2, 3))
+    val before = client.keys("participants").size
+    val report = graft.pipeline.ZoomRunner.run(p, graft.pipeline.ZoomRunner.JobFlags(meetings = true),
+      LocalDate.parse("2023-08-03"), _ => ())
+    assert(report.success, report.errorMessage)
+    assert(client.keys("participants").drop(before).distinct == Seq(Some("m1"), Some("m2")))
+    assert(new java.io.File(wh, "participants").list().filter(_.contains("=")).sorted.toSeq ==
+      Seq("run_date=2023-08-01", "run_date=2023-08-02"))
   }
 }
