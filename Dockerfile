@@ -7,7 +7,7 @@
 # flag surface as the reference CLI).
 #
 # Build:  docker build -t graft .
-# Run:    docker run graft --all \
+# Run:    docker run graft --users --meetings \
 #           --warehouse s3a://bucket/zoom \
 #           --client-class com.example.ZoomHttpClient
 # Cluster mode: override the entrypoint's master, e.g.

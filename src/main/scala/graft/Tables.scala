@@ -2,11 +2,18 @@ package graft
 
 import java.io.FileNotFoundException
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.schema.MessageType
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
@@ -85,6 +92,55 @@ object Tables {
     * on every call and ignores the session's settings. */
   private[graft] def openParquet(file: FileStatus, conf: Configuration): ParquetFileReader =
     ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf), HadoopReadOptions.builder(conf).build())
+
+  /** The values of the flat `columns` in each record of the data files
+    * directly under `dir`, read on the driver with parquet-mr and no Spark
+    * job: each file's footer, then only those columns' chunks. A row holds
+    * one value per column, null where the value is null or the file lacks
+    * the column (a declared-schema read gives it nulls); a file with none
+    * of `columns` gives no rows. BINARY is read as a String and INT64 as a
+    * Long; a column of another type fails. The data
+    * files are those Spark's file index reads: names starting with `_` or
+    * `.` and names ending in `._COPYING_` are skipped. An absent `dir` has
+    * no rows. */
+  private[graft] def readColumns(dir: Path, conf: Configuration, columns: Seq[String]): Seq[IndexedSeq[Any]] = {
+    def dataFile(f: FileStatus) = {
+      val n = f.getPath.getName
+      f.isFile && !n.startsWith("_") && !n.startsWith(".") && !n.endsWith("._COPYING_")
+    }
+    def value(r: Group, i: Int): Any = r.getType.getType(i).asPrimitiveType.getPrimitiveTypeName match {
+      case PrimitiveTypeName.BINARY => r.getString(i, 0)
+      case PrimitiveTypeName.INT64 => r.getLong(i, 0)
+      case t => throw new UnsupportedOperationException(
+        s"$dir: column ${r.getType.getFieldName(i)} is $t; only BINARY and INT64 columns are read")
+    }
+    def rowsOf(f: FileStatus): Seq[IndexedSeq[Any]] = {
+      val reader = openParquet(f, conf)
+      try {
+        val schema = reader.getFooter.getFileMetaData.getSchema
+        val present = columns.filter(schema.containsField)
+        if (present.isEmpty) return Nil
+        val requested = new MessageType(schema.getName, present.map(c => schema.getType(schema.getFieldIndex(c))): _*)
+        reader.setRequestedSchema(requested)
+        val io = new ColumnIOFactory().getColumnIO(requested, schema)
+        val at = columns.map(c => if (requested.containsField(c)) requested.getFieldIndex(c) else -1).toIndexedSeq
+        val rows = ArrayBuffer.empty[IndexedSeq[Any]]
+        var rowGroup = reader.readNextRowGroup()
+        while (rowGroup != null) {
+          val records = io.getRecordReader(rowGroup, new GroupRecordConverter(requested))
+          for (_ <- 0L until rowGroup.getRowCount) {
+            val r = records.read()
+            rows += at.map(i => if (i < 0 || r.getFieldRepetitionCount(i) == 0) null else value(r, i))
+          }
+          rowGroup = reader.readNextRowGroup()
+        }
+        rows.toSeq
+      } finally reader.close()
+    }
+    val files = try dir.getFileSystem(conf).listStatus(dir).toSeq
+      catch { case _: FileNotFoundException => Nil }
+    files.filter(dataFile).flatMap(rowsOf)
+  }
 
   /** Register every harness table as a temp view so the engine's FULL
     * surface is reachable through plain `spark.sql(...)` — the way the

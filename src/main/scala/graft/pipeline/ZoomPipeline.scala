@@ -6,11 +6,7 @@ import java.time.LocalDate
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.io.ColumnIOFactory
-import org.apache.parquet.schema.MessageType
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
@@ -57,10 +53,15 @@ import graft.sources.PagedApi.PagedApiClient
   *  - the pending days' meetings keys (`uuid` or `id`), read on the
   *    driver from the pending days' files, with no Spark job (a catch-up
   *    of N days opens N files one after another; a daily run opens one);
-  *  - the keyed loads' fetched JSON: keys are fetched one by one and
-  *    written per batch of at most [[ZoomPipeline.BatchChars]] characters
-  *    plus one day's records.
-  * Data rows are never collected.
+  *  - the group list (`id` and `name`), read on the driver from the
+  *    committed `groups` files, with no Spark job;
+  *  - the fetched JSON of a snapshot (users, groups), and of a batch of the
+  *    keyed loads and of a meetings catch-up: keys and days are fetched
+  *    one by one and written per batch of at most
+  *    [[ZoomPipeline.BatchChars]] characters plus one unit's records.
+  * Data rows are never collected, and no table is read back: every Spark
+  * job of a load is one of its writes, and the row counts the loads return
+  * are counted on the driver.
   */
 class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
                    warehouse: String, sleep: Long => Unit = Thread.sleep) {
@@ -69,19 +70,6 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
   spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
   private def path(table: String) = s"$warehouse/$table"
-
-  // Hadoop FileSystem, not java.io.File — the warehouse may be hdfs:// or
-  // s3a://, where a local File.exists() is always false and would silently
-  // reset every incremental load to the fallback branch.
-  private def fileSystemPath(table: String): (FileSystem, Path) = {
-    val p = new Path(path(table))
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  def tableExists(table: String): Boolean = {
-    val (fs, p) = fileSystemPath(table)
-    fs.exists(p)
-  }
 
   /** The values of `table`'s partition column `column`, from one listing of
     * the table root; no data file is read. Dynamic partition overwrite
@@ -96,7 +84,11 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
     * one under one root.
     */
   private def partitionValues(table: String, column: String): Seq[String] = {
-    val (fs, root) = fileSystemPath(table)
+    // Hadoop FileSystem, not java.io.File: the warehouse may be hdfs:// or
+    // s3a://, where a local listing finds nothing and would silently reset
+    // every incremental load to the fallback branch
+    val root = new Path(path(table))
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val prefix = s"$column="
     val dirs = try fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath)
       catch { case _: FileNotFoundException => Nil }
@@ -111,13 +103,11 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
 
   /** The keyed stages' work list: the `run_date`s of `meetings` not yet in
     * `table`, oldest first, each with its meetings' distinct non-null
-    * `keyCol` values in order (`key` reads the one requested column of a
-    * record). The days come from two listings. The keys are read on the
-    * driver from the pending days' files, with no Spark job: each pending
-    * day's directory is listed, and the `keyCol` column chunks of each
-    * data file are read with parquet-mr. The data files are those Spark's
-    * file index reads: names starting with `_` or `.` and names ending in
-    * `._COPYING_` are skipped. A file without `keyCol` has no keys, as a
+    * `keyCol` values in order (`key` types a value). The days come from two
+    * listings. The keys are read on the driver from the pending days'
+    * files, with no Spark job ([[Tables.readColumns]]: each pending day's
+    * directory is listed and the `keyCol` column chunks of its data files
+    * are read with parquet-mr). A file without `keyCol` has no keys, as a
     * declared-schema read gives it nulls. A pending day without a key is
     * left out. Loaded days' files are never opened.
     *
@@ -126,40 +116,15 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
     * a footer read and a column-chunk read per file on an object store).
     * A daily run has one pending day.
     */
-  private def pendingDays[K: Ordering](table: String, keyCol: String)(key: Group => K): Seq[(String, Seq[K])] = {
+  private def pendingDays[K: Ordering](table: String, keyCol: String)(key: Any => K): Seq[(String, Seq[K])] = {
     val loaded = partitionValues(table, "run_date").toSet
     val days = partitionValues("meetings", "run_date").filterNot(loaded).sorted
     if (days.isEmpty) return Nil
-    val (fs, root) = fileSystemPath("meetings")
+    val root = new Path(path("meetings"))
     val conf = spark.sessionState.newHadoopConf()
-    def dataFile(f: FileStatus) = {
-      val n = f.getPath.getName
-      f.isFile && !n.startsWith("_") && !n.startsWith(".") && !n.endsWith("._COPYING_")
-    }
-    def keysOf(f: FileStatus): Seq[K] = {
-      val reader = Tables.openParquet(f, conf)
-      try {
-        val schema = reader.getFooter.getFileMetaData.getSchema
-        if (!schema.containsField(keyCol)) return Nil
-        val requested = new MessageType(schema.getName, schema.getType(schema.getFieldIndex(keyCol)))
-        reader.setRequestedSchema(requested)
-        val io = new ColumnIOFactory().getColumnIO(requested, schema)
-        val keys = ArrayBuffer.empty[K]
-        var rowGroup = reader.readNextRowGroup()
-        while (rowGroup != null) {
-          val records = io.getRecordReader(rowGroup, new GroupRecordConverter(requested))
-          for (_ <- 0L until rowGroup.getRowCount) {
-            val r = records.read()
-            if (r.getFieldRepetitionCount(0) > 0) keys += key(r)
-          }
-          rowGroup = reader.readNextRowGroup()
-        }
-        keys.toSeq
-      } finally reader.close()
-    }
     days.flatMap { d =>
       val dir = new Path(root, ExternalCatalogUtils.getPartitionPathString("run_date", d))
-      val keys = fs.listStatus(dir).toSeq.filter(dataFile).flatMap(keysOf)
+      val keys = Tables.readColumns(dir, conf, Seq(keyCol)).flatMap(r => Option(r.head)).map(key)
       if (keys.isEmpty) None else Some(d -> keys.distinct.sorted)
     }
   }
@@ -214,12 +179,13 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
     * complete units fetched before it, then propagates; the failing unit's
     * records are dropped. A unit without records writes no partition; if
     * no fetched unit had any, the empty frame is written once so the table
-    * exists.
+    * exists. Returns the records written, counted on the driver.
     */
   private[graft] def loadKeyed[K](units: Seq[(String, Seq[K])], bound: Long = ZoomPipeline.BatchChars)
-                                 (fetch: K => Seq[String])(write: DataFrame => Unit): Unit = {
+                                 (fetch: K => Seq[String])(write: DataFrame => Unit): Long = {
     val batch = ArrayBuffer.empty[(String, String, String)]
     var chars = 0L
+    var rows = 0L
     var fetched = false
     var wrote = false
     def flush(): Unit =
@@ -234,28 +200,43 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
         catch { case NonFatal(e) => flush(); throw e }
       fetched = true
       batch ++= records
+      rows += records.size
       chars += records.map(_._3.length.toLong).sum
       if (chars >= bound) flush()
     }
     flush()
+    rows
   }
 
   /** Users snapshot (§3.1): paged fetch → fixed 13-column reindex → atomic
-    * overwrite. Returns rows loaded.
+    * overwrite, one Spark job. Returns the rows this call wrote, counted on
+    * the driver: one per fetched record.
     */
-  def loadUsers(): Long = {
-    val pages = PagedApi.fetchAllPages(client, "users", sleep = sleep)
-    val users = Ingest.reindexTo(pagesToDf(pages, Schemas.users), Schemas.users)
-    users.write.mode("overwrite").parquet(path("users"))
-    table("users").count()
+  def loadUsers(): Long = snapshot("users", Schemas.users)
+
+  /** Paged fetch of `entity` → declared-schema reindex → atomic overwrite
+    * of its table, one Spark job and no read-back. Returns the fetched
+    * records, which are the rows written: `from_json` gives one row per
+    * record and the reindex keeps the row count. */
+  private def snapshot(entity: String, schema: StructType): Long = {
+    val pages = PagedApi.fetchAllPages(client, entity, sleep = sleep)
+    Ingest.reindexTo(pagesToDf(pages, schema), schema).write.mode("overwrite").parquet(path(entity))
+    pages.map(_.records.size.toLong).sum
   }
 
-  /** Incremental meetings load (§3.2 step 1): the next day after the
-    * newest committed `run_date` partition, or the school-year start of
-    * `runDate` when there is none ([[ZoomPipeline.schoolYearStart]]); skip
-    * when caught up (main.py:213-215); write the day's rows into a
-    * run_date partition (idempotent re-run). No Spark job runs before the
-    * first fetch: the watermark is one listing of the table root.
+  /** Incremental meetings load (§3.2 step 1): every day from the day after
+    * the newest committed `run_date` partition, or from the school-year
+    * start of `runDate` when there is none
+    * ([[ZoomPipeline.schoolYearStart]]), to the day before `runDate`;
+    * nothing when caught up (main.py:213-215). The reference loads one day
+    * per invocation; this call loads all of them. Days are fetched in
+    * order and written per batch of whole days ([[loadKeyed]], at most
+    * [[ZoomPipeline.BatchChars]] characters of JSON plus one day), one job
+    * per batch, each day's rows deduped by `uuid` into its run_date
+    * partition (idempotent re-run). No Spark job runs before the first
+    * fetch: the watermark is one listing of the table root. A fetch
+    * failure writes the complete days fetched before it, then propagates;
+    * a rerun starts after the newest of them.
     *
     * Departs from main.py's `max(start_time)+1` rule (main.py:251-267):
     * the watermark is the day a meeting was *listed* on, not the day of
@@ -264,30 +245,33 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
     * forever), and a meeting listed on one day that starts on the next in
     * UTC no longer makes the next run skip that next day.
     *
-    * A day the API returns no meetings for writes nothing and the next day
-    * is fetched, up to the day before `runDate`: an empty day adds no
-    * partition, so it could never move the watermark past itself.
-    * Returns the loaded date, or None when caught up or every remaining
-    * day was empty.
+    * A day the API returns no meetings for writes nothing: an empty day
+    * adds no partition, so it could never move the watermark past itself,
+    * and the next call fetches it again. Returns the newest day written,
+    * or None when caught up or every remaining day was empty.
     */
   def loadMeetings(runDate: LocalDate): Option[LocalDate] = {
-    var day = partitionValues("meetings", "run_date").map(LocalDate.parse)
+    val from = partitionValues("meetings", "run_date").map(LocalDate.parse)
       .maxByOption(_.toEpochDay).fold(ZoomPipeline.schoolYearStart(runDate))(_.plusDays(1))
-    while (day.isBefore(runDate)) {
-      val pages = PagedApi.fetchAllPages(client, "meetings", Some(day.toString), sleep = sleep)
-      if (pages.exists(_.records.nonEmpty)) {
-        // the day's JSON is a local relation: one partition dedups it
+    val days = Iterator.iterate(from)(_.plusDays(1)).takeWhile(_.isBefore(runDate)).map(_.toString).toSeq
+    var newest = Option.empty[String]
+    loadKeyed(days.map(d => d -> Seq(d))) { day =>
+      val records = PagedApi.fetchAllPages(client, "meetings", Some(day), sleep = sleep).flatMap(_.records)
+      if (records.nonEmpty) newest = Some(day)
+      records
+    } { batch =>
+      // loadKeyed writes an empty frame when no day had meetings; it would
+      // add no partition, so it is not written
+      if (newest.isDefined)
+        // the batch's JSON is a local relation: one partition dedups it
         // without an Exchange, so the write is one job
-        pagesToDf(pages, Schemas.meetings)
+        batch.select(from_json(col("value"), Schemas.meetings).as("r"), col("unit").as("run_date"))
+          .select("r.*", "run_date")
           .coalesce(1)
-          .dropDuplicates("uuid") // §7.5.3: no double rows from retried pages
-          .withColumn("run_date", lit(day.toString))
+          .dropDuplicates("run_date", "uuid") // §7.5.3: no double rows from retried pages
           .write.mode("overwrite").partitionBy("run_date").parquet(path("meetings"))
-        return Some(day)
-      }
-      day = day.plusDays(1)
     }
-    None // watermark caught up, or every remaining day empty
+    newest.map(LocalDate.parse)
   }
 
   /** Participants (§3.2 step 2) of the meetings days not loaded yet
@@ -299,7 +283,7 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
     * counts twice).
     */
   def loadParticipants(): Int = {
-    val days = pendingDays("participants", "uuid")(_.getString(0, 0))
+    val days = pendingDays("participants", "uuid") { case uuid: String => uuid }
     loadKeyed(days)(keyRecords("participants", _)) { batch =>
       keyedRows(batch, Schemas.participants, "meeting_uuid")
         .withColumnRenamed("unit", "run_date")
@@ -317,7 +301,7 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
     * Returns the keys fetched.
     */
   def loadMeetingSettings(): Int = {
-    val days = pendingDays("meeting_settings", "id")(_.getLong(0, 0))
+    val days = pendingDays("meeting_settings", "id") { case id: Long => id }
     loadKeyed(days)(id =>
       PagedApi.fetchWithRetry(client, "settings", Some(id.toString), None, sleep = sleep).records
     ) { batch =>
@@ -340,27 +324,25 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
   /** Permission groups snapshot (S3 single-shot scan, main.py:125-135):
     * one-page fetch → declared-schema reindex → atomic overwrite (the
     * reference drops the table before inserting, main.py:129-130 — a
-    * reader in that window sees nothing; overwrite here is atomic).
-    * Returns rows loaded.
+    * reader in that window sees nothing; overwrite here is atomic), one
+    * Spark job. Returns the rows this call wrote, counted on the driver:
+    * one per fetched record.
     */
-  def loadGroups(): Long = {
-    val pages = PagedApi.fetchAllPages(client, "groups", sleep = sleep)
-    val groups = Ingest.reindexTo(pagesToDf(pages, Schemas.groups), Schemas.groups)
-    groups.write.mode("overwrite").parquet(path("groups"))
-    table("groups").count()
-  }
+  def loadGroups(): Long = snapshot("groups", Schemas.groups)
 
   /** Group-id lookup (main.py:137-147): optional name filter, ids sorted
     * on the driver for determinism (the reference inherits arbitrary DB
-    * order); a group without an id is skipped. Driver edge: the group list
-    * is small by construction.
+    * order), not deduplicated; a group without an id is skipped. The `id`
+    * and `name` columns of the committed `groups` files are read on the
+    * driver ([[Tables.readColumns]]), with no Spark job, on every call:
+    * what a crashed run or another process committed is what is read. A
+    * file without `name` matches no name; an absent table has no ids.
+    * Driver edge: the group list is small by construction.
     */
-  def groupIds(groupName: Option[String] = None): Seq[String] = {
-    if (!tableExists("groups")) return Seq.empty
-    val g = table("groups")
-    groupName.fold(g)(n => g.filter(col("name") === n))
-      .select("id").filter(col("id").isNotNull).as[String].collect().sorted.toSeq
-  }
+  def groupIds(groupName: Option[String] = None): Seq[String] =
+    Tables.readColumns(new Path(path("groups")), spark.sessionState.newHadoopConf(), Seq("id", "name"))
+      .collect { case Seq(id: String, name) if groupName.forall(_ == name) => id }
+      .sorted
 
   /** A4 first-match pick — the reference's `_get_group_ids("Students")[0]`
     * (main.py:186), total instead of crashing on a missing group.
@@ -369,18 +351,19 @@ class ZoomPipeline(spark: SparkSession, client: PagedApiClient,
     groupIds(Some(groupName)).headOption
 
   /** Group members (S4 per-key scan, main.py:149-170): page loop per group
-    * id, one write per bounded batch of groups ([[loadKeyed]]), parent-key
-    * injection, one partition per group so a re-run overwrites instead of
-    * duplicating. Returns total member rows.
+    * id ([[groupIds]]), one write per bounded batch of groups
+    * ([[loadKeyed]]), parent-key injection, one partition per group so a
+    * re-run overwrites instead of duplicating. No Spark job runs before the
+    * first fetch. Returns the member rows this call wrote, counted on the
+    * driver; the partitions of groups the API no longer lists stay in the
+    * table and are not counted.
     */
-  def loadGroupMembers(): Long = {
+  def loadGroupMembers(): Long =
     loadKeyed(groupIds().map(g => g -> Seq(g)))(keyRecords("group_members", _)) { batch =>
       keyedRows(batch, Schemas.groupMembers, "group_id")
         .drop("unit")
         .write.mode("overwrite").partitionBy("group_id").parquet(path("group_members"))
     }
-    if (tableExists("group_members")) table("group_members").count() else 0L
-  }
 
   /** Reverse ETL (§3.3): per-row error isolation — one bad row must not
     * fail the batch (main.py:188-194). Returns (succeeded, failed).

@@ -9,9 +9,12 @@ import org.apache.spark.sql.{DataFrame, Row}
   *
   *  - flag dispatch mirrors `main()` (/root/reference/main.py:337-349 with
   *    the argparse flags of /root/reference/config.py:9-25): `--users`
-  *    runs users + groups + group members, `--accounts` the reverse-ETL
-  *    account creation, `--meetings` the meetings → participants →
-  *    settings chain, `--all` everything;
+  *    runs users + groups + group members, `--meetings` the meetings →
+  *    participants → settings chain, `--accounts` the reverse-ETL account
+  *    creation, `--all` everything. The account stage runs last, after
+  *    the loads (the reference runs it between them; it reads only the
+  *    groups the users stages load), so a failing account stage leaves the
+  *    other selected stages as they run without it;
   *  - the whole run executes under try/finally and a [[Notifier]] receives
   *    one success-or-error [[JobReport]] (/root/reference/main.py:352-360
   *    + mailer.py:56-62) — subject/body shape preserved, transport
@@ -87,18 +90,16 @@ object ZoomRunner {
           stage("load_groups") { pipeline.loadGroups() }
           stage("load_group_members") { pipeline.loadGroupMembers() }
         }
+        if (flags.meetings) {
+          // the reference loads one day per invocation (main.py:213-215);
+          // one call loads every day up to the run date instead
+          stage("load_meetings") { pipeline.loadMeetings(runDate) }
+          stage("load_participants") { pipeline.loadParticipants() }
+          stage("load_meeting_settings") { pipeline.loadMeetingSettings() }
+        }
         if (flags.accounts) stage("create_student_accounts") {
           val df = students()
           if (df != null) pipeline.createStudentAccounts(df, create)
-        }
-        if (flags.meetings) {
-          // the reference loads one day per invocation (main.py:213-215);
-          // drain to the run date so one run converges instead
-          stage("load_meetings") {
-            while (pipeline.loadMeetings(runDate).isDefined) ()
-          }
-          stage("load_participants") { pipeline.loadParticipants() }
-          stage("load_meeting_settings") { pipeline.loadMeetingSettings() }
         }
         None
       } catch {

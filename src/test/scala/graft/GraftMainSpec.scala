@@ -57,6 +57,25 @@ class GraftMainSpec extends SparkTestBase {
     assert(reports.size == 1 && !reports.head.success)
     assert(reports.head.errorMessage.exists(_.contains("boom")))
   }
+
+  test("runCli: --accounts fails after the other selected stages, naming the missing transport") {
+    val users = Seq("load_users", "load_groups", "load_group_members")
+    val meetings = Seq("load_meetings", "load_participants", "load_meeting_settings")
+    for ((flags, ran) <- Seq(
+        ZoomRunner.JobFlags(accounts = true) -> Nil,
+        ZoomRunner.parseFlags(Seq("--all")) -> (users ++ meetings))) {
+      val wh = java.nio.file.Files.createTempDirectory("graftmain3").toString
+      val reports = scala.collection.mutable.ArrayBuffer.empty[ZoomRunner.JobReport]
+      val code = GraftMain.runCli(spark,
+        GraftMain.Cli(flags, wh, classOf[GraftMainSpec.EmptyClient].getName,
+          java.time.LocalDate.parse("2023-08-03")),
+        notifier = r => { reports += r; () })
+      assert(code == 1, flags)
+      assert(reports.size == 1 && !reports.head.success, flags)
+      assert(reports.head.errorMessage.exists(_.contains("account-creation transport")), reports.head.errorMessage)
+      assert(reports.head.stagesRun == ran, flags)
+    }
+  }
 }
 
 object GraftMainSpec {

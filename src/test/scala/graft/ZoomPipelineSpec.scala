@@ -82,8 +82,8 @@ class ZoomPipelineSpec extends SparkTestBase {
     val (p, client) = freshPipeline()
     val runDate = LocalDate.parse("2023-08-03")
 
-    // meetings: watermark starts at school-year fallback (Aug 1), walks to runDate
-    assert(p.loadMeetings(runDate).contains(LocalDate.parse("2023-08-01")))
+    // meetings: watermark starts at school-year fallback (Aug 1); one call
+    // loads every day before runDate and returns the newest
     assert(p.loadMeetings(runDate).contains(LocalDate.parse("2023-08-02")))
     assert(p.loadMeetings(runDate).isEmpty) // caught up → guard skip
     assert(p.table("meetings").count() == 3)
@@ -581,6 +581,110 @@ class ZoomPipelineSpec extends SparkTestBase {
     val settings = new ZoomPipeline(spark, stopAt("settings", fx), wh, sleep = _ => ())
     assert(jobsLaunched { intercept[FirstFetch](participants.loadParticipants()) } == 0)
     assert(jobsLaunched { intercept[FirstFetch](settings.loadMeetingSettings()) } == 0)
+  }
+
+  test("loadUsers, loadGroups and loadGroupMembers start no Spark job before their first fetch") {
+    val wh = Files.createTempDirectory("zoomwh").toString
+    for (entity <- Seq("users", "groups"))
+      assert(jobsLaunched {
+        intercept[FirstFetch] {
+          val p = new ZoomPipeline(spark, stopAt(entity, fixtures), wh, sleep = _ => ())
+          if (entity == "users") p.loadUsers() else p.loadGroups()
+        }
+      } == 0, entity)
+    assert(new ZoomPipeline(spark, new FixtureClient(fixtures), wh, sleep = _ => ()).loadGroups() == 3L)
+    val members = new ZoomPipeline(spark, stopAt("group_members", fixtures), wh, sleep = _ => ())
+    assert(jobsLaunched { intercept[FirstFetch](members.loadGroupMembers()) } == 0)
+  }
+
+  test("a --users run with a 3-day meetings catch-up launches only its 6 writes; group lookups launch none") {
+    import graft.pipeline.ZoomRunner
+    val fx = fixtures.filter { case ((e, _), _) => Set("users", "groups", "group_members")(e) } ++ daysOf(3)
+    val p = new ZoomPipeline(spark, new FixtureClient(fx), Files.createTempDirectory("zoomwh").toString,
+      sleep = _ => ())
+    var report: ZoomRunner.JobReport = null
+    val jobs = jobsLaunched {
+      report = ZoomRunner.run(p, ZoomRunner.JobFlags(users = true, meetings = true), LocalDate.parse("2023-08-04"), _ => ())
+    }
+    assert(report.success, report.errorMessage)
+    // users, groups, group_members, one meetings batch, participants, settings
+    assert(jobs == 6)
+    assert(jobsLaunched {
+      assert(p.groupIds() == Seq("g1", "g2", "g3"))
+      assert(p.firstGroupId("Students").contains("g1"))
+    } == 0)
+    assert(p.table("users").count() == 3 && p.table("groups").count() == 3 && p.table("group_members").count() == 3)
+    for (t <- Seq("meetings", "participants", "meeting_settings")) assert(p.table(t).count() == 3, t)
+  }
+
+  test("groupIds reads the ids a Spark read of the groups files gives") {
+    import org.apache.spark.sql.functions.col
+    val wh = Files.createTempDirectory("zoomwh").toString
+    val root = s"$wh/groups"
+    // two part files: a null id, a null name, duplicate names and a
+    // duplicate id; then a file without `name` and one without `id`
+    Seq(("g2", "Students"), (null, "Students"), ("g1", null)).toDF("id", "name").coalesce(1).write.parquet(root)
+    Seq(("g3", "Staff"), ("g0", "Students"), ("g1", "Students")).toDF("id", "name").coalesce(1)
+      .write.mode("append").parquet(root)
+    Seq("g9").toDF("id").coalesce(1).write.mode("append").parquet(root)
+    Seq("Students").toDF("name").coalesce(1).write.mode("append").parquet(root)
+    val names = new java.io.File(root).list().toSeq
+    assert(names.count(n => n.startsWith("part-") && n.endsWith(".parquet")) == 4, names)
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")), names)
+    Files.write(java.nio.file.Paths.get(root, "part-9.parquet._COPYING_"), Array[Byte](1, 2, 3))
+
+    def onSpark(name: Option[String]): Seq[String] = {
+      val g = spark.read.schema("id STRING, name STRING").parquet(root)
+      name.fold(g)(n => g.filter(col("name") === n))
+        .filter(col("id").isNotNull).select("id").as[String].collect().sorted.toSeq
+    }
+    assert(onSpark(None) == Seq("g0", "g1", "g1", "g2", "g3", "g9"))
+    assert(onSpark(Some("Students")) == Seq("g0", "g1", "g2"))
+    val p = new ZoomPipeline(spark, new FixtureClient(Map.empty), wh, sleep = _ => ())
+    for (n <- Seq(None, Some("Students"), Some("Staff"), Some("Nobody")))
+      assert(p.groupIds(n) == onSpark(n), n)
+    assert(p.firstGroupId("Students").contains("g0"))
+    val empty = new ZoomPipeline(spark, new FixtureClient(Map.empty), Files.createTempDirectory("zoomwh").toString)
+    assert(empty.groupIds() == Seq.empty && empty.firstGroupId("Students").isEmpty)
+  }
+
+  test("a meetings catch-up failing on day k keeps the days before it; a rerun fetches from day k") {
+    val fx = daysOf(5)
+    val runDate = LocalDate.parse("2023-08-06")
+    val failDay = "2023-08-03"
+    val failing = new RecordingClient(fx) {
+      override def fetchPage(e: String, k: Option[String], t: Option[String]): ApiPage =
+        if (e == "meetings" && k.contains(failDay)) {
+          requests :+= ((e, k))
+          throw new PagedApi.TransientApiError(s"$failDay down")
+        } else super.fetchPage(e, k, t)
+    }
+    val wh = Files.createTempDirectory("zoomwh").toString
+    def committed(root: String) =
+      new java.io.File(root, "meetings").list().filter(_.startsWith("run_date=")).sorted.toSeq
+    val jobs = jobsLaunched {
+      val e = intercept[PagedApi.TransientApiError] {
+        new ZoomPipeline(spark, failing, wh, sleep = _ => ()).loadMeetings(runDate)
+      }
+      assert(e.getMessage.contains(s"$failDay down"))
+    }
+    assert(jobs == 1) // the days before the failing one, in one batch
+    assert(failing.keys("meetings").distinct == Seq("2023-08-01", "2023-08-02", failDay).map(Option(_)))
+    assert(committed(wh) == Seq("run_date=2023-08-01", "run_date=2023-08-02"))
+
+    val rerun = new RecordingClient(fx)
+    val p = new ZoomPipeline(spark, rerun, wh, sleep = _ => ())
+    assert(p.loadMeetings(runDate).contains(LocalDate.parse("2023-08-05")))
+    assert(rerun.keys("meetings") == Seq(failDay, "2023-08-04", "2023-08-05").map(Option(_)))
+    assert(jobsLaunched { assert(p.loadMeetings(runDate).isEmpty) } == 0)
+    assert(rerun.keys("meetings").size == 3) // caught up: nothing fetched
+
+    val whole = Files.createTempDirectory("zoomwh").toString
+    val uninterrupted = new ZoomPipeline(spark, new FixtureClient(fx), whole, sleep = _ => ())
+    assert(jobsLaunched { assert(uninterrupted.loadMeetings(runDate).contains(LocalDate.parse("2023-08-05"))) } == 1)
+    assert(committed(wh) == committed(whole) && committed(wh).size == 5)
+    def rows(q: ZoomPipeline) = q.table("meetings").collect().map(_.toString).sorted.toSeq
+    assert(rows(p) == rows(uninterrupted))
   }
 
   /** `days` days from 2023-08-01 with one meeting each (`d01`, `d02`, …),
